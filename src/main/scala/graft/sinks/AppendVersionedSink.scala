@@ -1,8 +1,8 @@
 package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.LatestState
 
 /** Append-only versioned sink with a dedup read view — the engine's analog
   * of the reference's ClickHouse path: the sink only ever appends
@@ -34,14 +34,9 @@ final class AppendVersionedSink(val tableDir: String, keyNames: Seq[String],
     * field round-tripping through the JSON DLQ) counts as NOT-a-delete:
     * `null =!= "DELETE"` is null and a bare filter would silently drop
     * the live row. */
-  private def winners(spark: SparkSession): DataFrame = {
-    val w = Window.partitionBy(keyNames.map(col): _*)
-      .orderBy(col(versionCol).desc, col("_batch_id").desc)
-    raw(spark)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
+  private def winners(spark: SparkSession): DataFrame =
+    LatestState.latestPerKey(raw(spark), keyNames.map(col),
+      Seq(col(versionCol), col("_batch_id")))
 
   /** The exact read view: latest version per key (ties broken by highest
     * `_batch_id` — redeliveries are byte-identical so either wins), with

@@ -57,7 +57,7 @@ object Retry {
     byClass || retryablePatterns.exists(msg.contains)
   }
 
-  sealed trait Outcome[+A]
+  sealed trait Outcome[+A] { def attempts: Int }
   case class Succeeded[A](value: A, attempts: Int) extends Outcome[A]
   /** `firstFailureAtMillis` = wall-clock of the FIRST failed attempt —
     * carried into the DLQ record (spec `data-model.md:241`). */

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -107,17 +108,19 @@ object CdcPipeline {
           val (valid, invalid) = ChangeEvent.validate(batch)
           // batchId marker makes the crash-replay path a no-op (the append
           // itself is not idempotent); batch_id rides along so any residual
-          // duplicate from a crash INSIDE the append window is identifiable
-          val vMarker = new java.io.File(s"$dlqDir/_validation_batch_$batchId")
-          if (!invalid.isEmpty && !vMarker.exists) {
+          // duplicate from a crash INSIDE the append window is identifiable.
+          // The marker lives on the DLQ path's own filesystem, so a replay
+          // on another host sees it.
+          val vMarker = new Path(s"$dlqDir/_validation_batch_$batchId")
+          val fs = vMarker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          if (!invalid.isEmpty && !fs.exists(vMarker)) {
             DlqSink.write(
               invalid.withColumnRenamed("_invalid_reason", "validation_reason")
                 .withColumn("batch_id", lit(batchId)),
               dlqDir, destination = "state-store",
               errorType = "ValidationError", errorMessage = "validation failed",
               failedAtMicros = System.currentTimeMillis() * 1000)
-            vMarker.getParentFile.mkdirs()
-            vMarker.createNewFile()
+            fs.createNewFile(vMarker)
           }
           // per-destination retry + failure isolation + DLQ handoff
           // (reference main.py:123-155 semantics; see FanOut)

@@ -55,8 +55,6 @@ object FanOut {
   final case class FanOutResult(destination: String,
       outcome: Retry.Outcome[Unit], dlqRows: Long, durationMs: Long = 0L)
 
-  /** Write `batch` to every destination concurrently; isolate failures.
-    * Returns per-destination outcomes (order of `dests`). */
   /** Timer for destination write timeouts — one daemon thread, shared. */
   private lazy val timeoutTimer = {
     val t = new java.util.concurrent.ScheduledThreadPoolExecutor(1, (r: Runnable) => {
@@ -68,6 +66,8 @@ object FanOut {
     t
   }
 
+  /** Write `batch` to every destination concurrently; isolate failures.
+    * Returns per-destination outcomes (order of `dests`). */
   def writeAll(batch: DataFrame, batchId: Long, dests: Seq[Destination],
       dlqDir: String)(implicit ec: ExecutionContext = ExecutionContext.global)
       : Seq[FanOutResult] = {
@@ -113,12 +113,7 @@ object FanOut {
               span.recordError(err)
               toDlq(batch, batchId, d.name, err, dlqDir, attempts, firstAt)
           }
-          val attempts = out match {
-            case Retry.Succeeded(_, a) => a
-            case Retry.Permanent(_, a, _) => a
-            case Retry.Exhausted(_, a, _) => a
-          }
-          span.setAttribute("retry.attempts", attempts)
+          span.setAttribute("retry.attempts", out.attempts)
             .setAttribute("dlq.rows", dlqRows)
             .end()
           FanOutResult(d.name, out, dlqRows,

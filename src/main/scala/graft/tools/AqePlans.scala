@@ -5,7 +5,6 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   AQEShuffleReadExec, QueryStageExec}
@@ -108,16 +107,7 @@ object AqePlans {
     val outFile = if (args.length > 1) args(1) else "PLANS_AQE.md"
     val names = if (args.length > 2) args(2).split(",").toSeq
       else ScaleTrend.DefaultQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
 
     // captured executions, in completion order
     val plans =
@@ -176,7 +166,7 @@ object AqePlans {
 
     val sb = new StringBuilder
     sb ++= "# PLANS_AQE — final adaptive plans (post-execution)\n\n"
-    sb ++= s"`graft.tools.AqePlans` over `$sfDir` at local[$cpus], AQE " +
+    sb ++= s"`graft.tools.AqePlans` over `$sfDir` at ${spark.sparkContext.master}, AQE " +
       "on — the runtime-re-optimized plans each query's measured " +
       "materialization actually executed (PLANS.md shows the STATIC " +
       "plans). Counts are walked from the executed plan OBJECTS: " +

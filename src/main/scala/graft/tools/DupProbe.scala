@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe: how the m11/m12 duplicate-QUERY set grows under corpus
@@ -19,16 +18,7 @@ object DupProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val docOff = if (args.length > 1) args(1).toLong else 0L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val h = graft.operators.Multimodal.imageAhashProbe(spark, dir)
       .persist()
     val n = h.count()

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Dev tool: write `df.explain("formatted")` for the named queries to
@@ -16,16 +15,7 @@ object ExplainDump {
     val tag = args(1)
     val outDir = if (args.length > 2) args(2) else "plans/r16"
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       // capture ON so eagerly-materialized pipelines (the evictAfter

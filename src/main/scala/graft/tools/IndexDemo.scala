@@ -2,16 +2,15 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
 import graft.streaming.{IndexDeployment, StreamingIndexCdc}
 
 /** Runnable tour of the ANN index LIFECYCLE the engine maintains — the
-  * demo-main sibling of `PipelineDemo` (CDC → sinks) and
-  * `StreamingDemo` (stream transforms), covering what the
-  * `IndexDeploymentSpec`/`StreamingIndexCdcSpec` suites prove:
+  * demo-main sibling of `PipelineDemo` (config boot, CDC → sinks),
+  * covering what the `IndexDeploymentSpec`/`StreamingIndexCdcSpec`
+  * suites prove:
   *
   *  1. blue/green deploy of generation 0 (train → shard-build → atomic
   *     pointer flip),
@@ -31,15 +30,7 @@ object IndexDemo {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     import spark.implicits._
 
     val work = Files.createTempDirectory("graft-index-demo").toString

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Dev tool: run one named query and break its wall time into Spark jobs —
@@ -16,16 +15,7 @@ object JobProfile {
     val names = args(0).split(",").toSeq
     val n = if (args.length > 1) args(1).toInt else 2
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
 
     case class Job(id: Int, desc: String, start: Long, var end: Long = 0L,
         var stages: Int = 0, var tasks: Int = 0, var taskTimeMs: Long = 0L)

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import graft.config.PipelineConfig
 import graft.obs.{HealthStatus, MetricsListener}
 import graft.streaming.CdcPipeline
@@ -27,17 +27,7 @@ object PipelineDemo {
       s"batch=${cfg.pipeline.batchSize} retry=${cfg.retry.maxAttempts} " +
       s"destinations=${cfg.enabledDestinations.map(_.name).mkString(",")}")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Spark-native Prometheus: driver metrics under /metrics/prometheus
-      // when the UI is on — the reference's metrics_port analog
-      .config("spark.ui.prometheus.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
 
     val work = Files.createTempDirectory("graft-demo")
     val eventsDir = s"$work/events"

@@ -3,7 +3,6 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Generates PLANS.md: a per-query physical-plan audit proving the
@@ -130,19 +129,13 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val outFile = if (args.length > 1) args(1) else "PLANS.md"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // AQE stays ON for real runs (Bench/Verify); the audit disables it so
-      // the static planner assigns codegen ids — under AQE those only
-      // materialize per query-stage at runtime and explain() shows none.
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // AQE stays ON for real runs (Bench/Verify); the audit disables it so
+    // the static planner assigns codegen ids — under AQE those only
+    // materialize per query-stage at runtime and explain() shows none.
+    // 32 partitions whatever the core count, so PLANS.md stays stable.
+    val spark = graft.Session.local(conf = Map(
+      "spark.sql.shuffle.partitions" -> "32",
+      "spark.sql.adaptive.enabled" -> "false"))
 
     // capture the pre-materialization plans of eagerly-checkpointed
     // pipelines (recall evals, audit suites) — without this the most

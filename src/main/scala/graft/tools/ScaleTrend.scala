@@ -292,16 +292,7 @@ object ScaleTrend {
     val explicitNames = if (args.length > 3)
       Some(args(3).split(",").toSeq) else None
     val outRoot = "/tmp/graft-scale"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
 
     def factorsFor(name: String): Seq[Int] = {
       val fs = explicitFactors.getOrElse(
@@ -411,7 +402,7 @@ object ScaleTrend {
       "shape-preserving replication — see the tool's scaladoc for the " +
       "transforms and why pair-generating structure grows linearly; " +
       "every perturbation is injective across ≥312 replicas). Single " +
-      s"runs at local[$cpus] with AQE on, codegen pre-warmed, quantizer " +
+      s"runs at ${spark.sparkContext.master} with AQE on, codegen pre-warmed, quantizer " +
       "artifacts pre-published at every scale (deploy-time rule); wall " +
       "ratios carry single-run noise (±10-20%), enough to separate " +
       "≈linear from superlinear, and two decades separate N^1.5 " +

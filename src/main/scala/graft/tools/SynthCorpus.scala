@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: materialize one ScaleTrend-synthesized corpus without
   * running the study — the input for oracle cross-checks of the
@@ -14,16 +13,7 @@ object SynthCorpus {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "/tmp/graft-synth"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     ScaleTrend.synthesize(spark, src, out, factor)
     println(s"[synth] $src x$factor -> $out")
     spark.stop()

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.MetadataBuilder
 import graft.plans.{AutoMaskRule, GraftExtensions}
@@ -38,6 +39,37 @@ class ExtensionsSpec extends SparkSpec {
         "edit_within1('kitten', 'sitting') AS far").head()
     assert(ed.getAs[Int]("sub") == 1 && ed.getAs[Int]("eq") == 0 &&
       ed.getAs[Int]("far") == -1)
+  }
+
+  test("spark.sql.extensions path: GraftExtensions loaded by class name " +
+      "injects hmac_sha256 and float_vec_dot into a new session") {
+    // Spark's own loading step for `spark.sql.extensions`: instantiate the
+    // named class with its no-arg constructor and apply it to the
+    // session's SparkSessionExtensions
+    val ext = Class.forName("graft.plans.GraftExtensions")
+      .getConstructor().newInstance()
+      .asInstanceOf[SparkSessionExtensions => Unit]
+    // the static `spark.sql.extensions` conf only applies when the
+    // SparkContext starts, so build a second session on the running
+    // context with the same extensions instead
+    val shared = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val withExt = try SparkSession.builder().withExtensions(ext).getOrCreate()
+    finally {
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+    }
+    assert(withExt ne shared)
+    val row = withExt.sql("SELECT hmac_sha256('x', 'k') AS t, " +
+      "float_vec_dot(CAST(array(1.0, 2.0) AS ARRAY<FLOAT>), " +
+      "CAST(array(3.0, 4.0) AS ARRAY<FLOAT>)) AS d").head()
+    val mac = javax.crypto.Mac.getInstance("HmacSHA256")
+    mac.init(new javax.crypto.spec.SecretKeySpec(
+      "k".getBytes("UTF-8"), "HmacSHA256"))
+    assert(row.getAs[String]("t") ==
+      mac.doFinal("x".getBytes("UTF-8")).map("%02x".format(_)).mkString)
+    assert(row.getAs[Double]("d") == 11.0)
   }
 
   test("edit_within1 equals the full Levenshtein clamped at 1, " +

@@ -86,6 +86,39 @@ class StreamingSpec extends SparkSpec {
     assert(store.current(spark).get.collect().toSet == before)
   }
 
+  test("validation DLQ marker lives under a file: URI DLQ directory, " +
+      "and a replayed batch does not dead-letter twice") {
+    val base = Files.createTempDirectory("cdc-dlq-uri")
+    val events = Files.createDirectories(base.resolve("events"))
+    writeFile(events, "b1.json", Seq(
+      eventJson("e1", "INSERT", "u1", "a@x.com", 1000),
+      """{"event_id":"bad","event_type":"INSERT","table_name":"users",
+        |"keyspace":"ecommerce","partition_key":{},"clustering_key":{},
+        |"columns":{},"timestamp_micros":5,"captured_at_micros":5}"""
+        .stripMargin.replaceAll("\n", "")))
+    val dlq = base.resolve("dlq")
+    val dlqUri = dlq.toUri.toString
+    assert(dlqUri.startsWith("file:"))
+    def runOnce(): Unit = {
+      val q = CdcPipeline.start(spark, events.toString,
+        base.resolve("state").toString, base.resolve("ckpt").toString, dlqUri)
+      q.processAllAvailable()
+      q.stop()
+    }
+    runOnce()
+    val markers = Option(dlq.toFile.list()).toSeq.flatten
+      .filter(_.startsWith("_validation_batch_"))
+    assert(markers == Seq("_validation_batch_0"))
+    assert(graft.sinks.DlqSink.count(spark, dlqUri, "state-store") == 1)
+
+    // drop batch 0's commit so the restart replays it under the same id
+    val commits = base.resolve("ckpt").resolve("commits")
+    Seq("0", ".0.crc").foreach(f => Files.deleteIfExists(commits.resolve(f)))
+    runOnce()
+    assert(Files.exists(commits.resolve("0")))
+    assert(graft.sinks.DlqSink.count(spark, dlqUri, "state-store") == 1)
+  }
+
   private def kvBatch(rows: (String, String, Long)*) =
     rows.toDF("k", "event_type", "ts")
 
