@@ -1,5 +1,8 @@
 package graft.streaming
 
+import scala.concurrent.{Await, ExecutionContext}
+import scala.concurrent.duration.Duration
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,7 +15,7 @@ import graft.sinks.DlqSink
   * Streaming pipeline:
   *
   *   readStream(JSONL change events) → validate → mask → dedup
-  *     → foreachBatch { DLQ invalids; upsert latest-state; commit }
+  *     → foreachBatch { DLQ invalids ∥ fan out (upsert latest-state, …); commit }
   *
   * What replaces what (SURVEY §7.1):
   *  - `CommitLogReader.poll_for_new_events` (`src/cdc/reader.py:203-242`)
@@ -84,9 +87,7 @@ object CdcPipeline {
       retryPolicy: graft.sinks.RetryPolicy = graft.sinks.RetryPolicy(),
       onBatch: Seq[FanOut.FanOutResult] => Unit = _ => ()): StreamingQuery = {
 
-    val store = new UpsertStateStore(stateDir,
-      keyNames = Seq("keyspace", "table_name", "event_key_cols"),
-      orderNames = Seq("timestamp_micros", "event_id"))
+    val store = stateStore(stateDir)
 
     val masked = maskEnvelope(rules)(raw)
       .withColumn("event_key", ChangeEvent.eventKeyCol)
@@ -106,28 +107,43 @@ object CdcPipeline {
         batch.persist()
         try {
           val (valid, invalid) = ChangeEvent.validate(batch)
-          // batchId marker makes the crash-replay path a no-op (the append
-          // itself is not idempotent); batch_id rides along so any residual
-          // duplicate from a crash INSIDE the append window is identifiable.
-          // The marker lives on the DLQ path's own filesystem, so a replay
-          // on another host sees it.
-          val vMarker = new Path(s"$dlqDir/_validation_batch_$batchId")
-          val fs = vMarker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!invalid.isEmpty && !fs.exists(vMarker)) {
-            DlqSink.write(
-              invalid.withColumnRenamed("_invalid_reason", "validation_reason")
-                .withColumn("batch_id", lit(batchId)),
-              dlqDir, destination = "state-store",
-              errorType = "ValidationError", errorMessage = "validation failed",
-              failedAtMicros = System.currentTimeMillis() * 1000)
-            fs.createNewFile(vMarker)
-          }
+          // counting the invalid rows computes every partition of the
+          // batch once, before any destination's clock starts: destination
+          // latencies (the health input) then time their own writes, and
+          // Spark's state-store commit check sees every dedup partition
+          // even when a replay skips every write
+          val invalidRows = invalid.count()
+          // the validation DLQ runs beside the fan-out (DlqSink serializes
+          // its appends with the fan-out's own DLQ handoffs). The batchId
+          // marker makes the crash-replay path a no-op (the append itself
+          // is not idempotent); batch_id rides along so any residual
+          // duplicate from a crash INSIDE the append window is
+          // identifiable. The marker lives on the DLQ path's own
+          // filesystem, so a replay on another host sees it.
+          val deadLettered = FanOut.inheriting(spark.sparkContext) {
+            val vMarker = new Path(s"$dlqDir/_validation_batch_$batchId")
+            val fs = vMarker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            if (invalidRows > 0 && !fs.exists(vMarker)) {
+              DlqSink.write(
+                invalid.withColumnRenamed("_invalid_reason", "validation_reason")
+                  .withColumn("batch_id", lit(batchId)),
+                dlqDir, destination = "state-store",
+                errorType = "ValidationError", errorMessage = "validation failed",
+                failedAtMicros = System.currentTimeMillis() * 1000)
+              fs.createNewFile(vMarker)
+            }
+          }(ExecutionContext.global)
           // per-destination retry + failure isolation + DLQ handoff
           // (reference main.py:123-155 semantics; see FanOut)
-          val results = FanOut.writeAll(valid, batchId,
-            FanOut.Destination("state-store", retryPolicy, store.upsert)
-              +: extraSinks,
-            dlqDir)
+          val results =
+            try FanOut.writeAll(valid, batchId,
+              FanOut.Destination("state-store", retryPolicy, store.upsert)
+                +: extraSinks,
+              dlqDir)
+            // the DLQ write reads the batch: never leave it running past
+            // the unpersist below
+            finally Await.ready(deadLettered, Duration.Inf)
+          Await.result(deadLettered, Duration.Inf)
           onBatch(results)
         } finally batch.unpersist()
         ()
@@ -135,11 +151,18 @@ object CdcPipeline {
       .start()
   }
 
+  /** The pipeline's state store: one upsert identity and one
+    * last-write-wins order shared by the writer and [[currentState]], so
+    * the read ranks base and delta rows exactly as a merge would. */
+  def stateStore(stateDir: String): UpsertStateStore =
+    new UpsertStateStore(stateDir,
+      keyNames = Seq("keyspace", "table_name", "event_key_cols"),
+      orderNames = Seq("timestamp_micros", "event_id"))
+
   /** Read the materialized latest state (the engine's analog of querying
     * the destination warehouse). */
   def currentState(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    new UpsertStateStore(stateDir, Seq("event_key_cols"),
-      Seq("timestamp_micros")).current(spark)
+    stateStore(stateDir).current(spark)
 
   /** Boot the pipeline from a [[graft.config.PipelineConfig]] — the
     * reference's `load_config → CDCPipeline(config)` path

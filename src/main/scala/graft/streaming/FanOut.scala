@@ -3,8 +3,10 @@ package graft.streaming
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.LocalProperties
 import graft.sinks.{DlqSink, Retry, RetryPolicy}
 
 /** Per-batch fan-out to N destinations with per-destination failure
@@ -66,11 +68,25 @@ object FanOut {
     t
   }
 
+  /** `Future(f)` on `ec`, under the calling thread's Spark local
+    * properties. A pooled thread otherwise tags every job it runs with the
+    * properties it inherited when the pool created it: in a streaming
+    * query, batch 0's description, batch id and SQL root execution id, in
+    * every later trigger. */
+  def inheriting[A](sc: SparkContext)(f: => A)(
+      implicit ec: ExecutionContext): Future[A] = {
+    val props = LocalProperties.capture(sc)
+    Future(LocalProperties.withCopy(sc, props)(f))
+  }
+
   /** Write `batch` to every destination concurrently; isolate failures.
-    * Returns per-destination outcomes (order of `dests`). */
+    * Returns per-destination outcomes (order of `dests`). Every write, and
+    * every DLQ handoff, runs under the caller's Spark local properties. */
   def writeAll(batch: DataFrame, batchId: Long, dests: Seq[Destination],
       dlqDir: String)(implicit ec: ExecutionContext = ExecutionContext.global)
       : Seq[FanOutResult] = {
+    val sc = batch.sparkSession.sparkContext
+    val props = LocalProperties.capture(sc)
     batch.persist()
     try {
       val futures = dests.map { d =>
@@ -84,7 +100,8 @@ object FanOut {
           .map(_.startSpan("batch_write",
             "destination" -> d.name, "batch.id" -> batchId))
           .getOrElse(graft.obs.Span.NonRecording)
-        val attempt = Future(Retry.withRetry(d.policy)(d.write(batch, batchId)))
+        val attempt = Future(LocalProperties.withCopy(sc, props)(
+          Retry.withRetry(d.policy)(d.write(batch, batchId))))
         // bound the whole retried write: a destination that HANGS (vs
         // fails) must not stall the other destinations' next batch
         val bounded: Future[Retry.Outcome[Unit]] =
@@ -104,7 +121,7 @@ object FanOut {
             p.future
           }
         bounded.map { out =>
-          val dlqRows = out match {
+          val dlqRows = LocalProperties.withCopy(sc, props)(out match {
             case Retry.Succeeded(_, _) => 0L
             case Retry.Permanent(err, attempts, firstAt) =>
               span.recordError(err)
@@ -112,7 +129,7 @@ object FanOut {
             case Retry.Exhausted(err, attempts, firstAt) =>
               span.recordError(err)
               toDlq(batch, batchId, d.name, err, dlqDir, attempts, firstAt)
-          }
+          })
           span.setAttribute("retry.attempts", out.attempts)
             .setAttribute("dlq.rows", dlqRows)
             .end()

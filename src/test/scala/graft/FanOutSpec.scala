@@ -94,6 +94,29 @@ class FanOutSpec extends SparkSpec {
       == "IllegalStateException")
   }
 
+  test("fan-out jobs carry the calling thread's job description, not the " +
+      "one a pooled thread inherited") {
+    val tmp = Files.createTempDirectory("graft-props")
+    val batch = Seq(("u1", "INSERT", 1L)).toDF("user_id", "event_type",
+      "timestamp_micros")
+    val sc = spark.sparkContext
+    // four destinations, each one job; a broken one adds its DLQ handoff
+    val dests = (0 until 4).map(i => FanOut.Destination(s"d$i",
+      RetryPolicy(maxAttempts = 1), (df: org.apache.spark.sql.DataFrame, _: Long) => {
+        df.count()
+        if (i == 3) throw new IllegalStateException("broken")
+      }))
+    def described(d: String) = jobPropertiesOf {
+      sc.setJobDescription(d)
+      try FanOut.writeAll(batch, 1L, dests, s"$tmp/dlq")
+      finally sc.setJobDescription(null)
+    }.map(p => Option(p.getProperty("spark.job.description")))
+    assert(described("first").nonEmpty)
+    val second = described("second")
+    assert(second.size >= 5, second)
+    assert(second.forall(_.contains("second")), second)
+  }
+
   test("a HUNG destination times out to its DLQ; the others are unaffected") {
     val tmp = Files.createTempDirectory("graft-hang")
     val dlqDir = s"$tmp/dlq"

@@ -160,6 +160,60 @@ object GraftProperties extends Properties("graft") {
           ev(pk, ck, ts).eventKey != ev(pk, ck, ts + 1).eventKey)
     }
 
+  // ---- upsert state store vs the LWW model (Spark-backed) -----------------
+
+  /** A stream of change events (key, I/U/D, timestamp, unique id) over a
+    * few keys with random timestamps (so later events are often older:
+    * late arrivals), exact redeliveries of earlier events, and the cut
+    * points that split it into micro-batches. */
+  private val genStream: Gen[(Vector[(String, String, Long, String)], Seq[Int])] = for {
+    n <- Gen.choose(5, 40)
+    fresh <- Gen.listOfN(n, for {
+      k <- Gen.choose(0, 5)
+      typ <- Gen.frequency(3 -> "I", 3 -> "U", 2 -> "D")
+      ts <- Gen.choose(0L, 30L)
+    } yield (s"k$k", typ, ts))
+    // explicit counts: Gen.listOf follows the size parameter, which is 0
+    // on the first (here the only) evaluation
+    nDup <- Gen.choose(0, n / 2)
+    dupAt <- Gen.listOfN(nDup, Gen.choose(0, n - 1))
+    nCuts <- Gen.choose(3, 8)
+    cuts <- Gen.listOfN(nCuts, Gen.choose(1, n - 1))
+  } yield {
+    val evs = fresh.zipWithIndex.map { case ((k, t, ts), i) => (k, t, ts, f"e$i%03d") }
+    val withDups = dupAt.sorted.foldLeft(evs.toVector) {
+      case (acc, i) => acc :+ acc(i)
+    }
+    (withDups, cuts.distinct.sorted)
+  }
+
+  /** `p` once per run rather than minSuccessfulTests times, since every
+    * case runs Spark jobs: a passing evaluation counts as a proof. */
+  private def once(p: Prop): Prop =
+    p.map(r => if (r.status == Prop.True) r.copy(status = Prop.Proof) else r)
+
+  property("upsert store over random batches == LatestState over all events") =
+    once(Prop.forAllNoShrink(Gen.listOfN(4, genStream)) { cases =>
+      val spark = SparkSpec.session
+      import spark.implicits._
+      import org.apache.spark.sql.functions.col
+      val cols = Seq("k", "typ", "ts", "id")
+      cases.forall { case (evs, cuts) =>
+        val dir = java.nio.file.Files.createTempDirectory("graft-prop").toString
+        val store = new graft.streaming.UpsertStateStore(dir, Seq("k"),
+          Seq("ts", "id"), isDeleteCol = "typ", deleteValue = "D")
+        val bounds = (0 +: cuts :+ evs.length).distinct
+        bounds.zip(bounds.tail).zipWithIndex.foreach { case ((a, b), batchId) =>
+          store.upsert(evs.slice(a, b).toDF(cols: _*), batchId.toLong)
+        }
+        val model = graft.ops.LatestState.materialize(evs.toDF(cols: _*),
+          Seq(col("k")), Seq(col("ts"), col("id")), col("typ") === "D")
+        def rows(df: org.apache.spark.sql.DataFrame) =
+          df.as[(String, String, Long, String)].collect().toSet
+        rows(store.current(spark).get) == rows(model)
+      }
+    })
+
   // ---- EditWithin1 vs the full Levenshtein DP ------------------------------
 
   /** Reference: plain code-point Levenshtein (the DuckDB/Spark builtin

@@ -51,8 +51,7 @@ class StreamingSpec extends SparkSpec {
         .stripMargin.replaceAll("\n", "")))
     run(events, base)
 
-    val store = new UpsertStateStore(base.resolve("state").toString,
-      Seq("event_key_cols"), Seq("timestamp_micros"))
+    val store = CdcPipeline.stateStore(base.resolve("state").toString)
     val s1 = store.current(spark).get.cache()
     assert(s1.count() == 2) // u1 deduped, bad row routed to DLQ
     val u1email = s1.filter(col("event_key_cols").contains("u1"))
@@ -122,6 +121,24 @@ class StreamingSpec extends SparkSpec {
   private def kvBatch(rows: (String, String, Long)*) =
     rows.toDF("k", "event_type", "ts")
 
+  /** `n` INSERTs of keys f0…f(n-1) at `ts`. */
+  private def filler(n: Int, ts: Long) =
+    (0 until n).map(i => (s"f$i", "INSERT", ts)).toDF("k", "event_type", "ts")
+
+  private def entries(dir: Path): Set[String] = {
+    val st = Files.list(dir)
+    try st.toArray.map(_.asInstanceOf[Path].getFileName.toString).toSet
+    finally st.close()
+  }
+
+  private def pointerOf(dir: Path): String =
+    new String(Files.readAllBytes(dir.resolve("_LATEST")), StandardCharsets.UTF_8).trim
+
+  /** Parquet bytes of a store directory, as the store's merge rule counts. */
+  private def dataBytes(dir: Path): Long =
+    entries(dir).filterNot(n => n.startsWith(".") || n.startsWith("_"))
+      .toSeq.map(n => Files.size(dir.resolve(n))).sum
+
   test("upsert store: a late event older than a DELETE cannot resurrect the row") {
     val dir = Files.createTempDirectory("graft-tomb").toString
     val store = new UpsertStateStore(dir, Seq("k"), Seq("ts"))
@@ -159,24 +176,161 @@ class StreamingSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-crash")
     val store = new UpsertStateStore(dir.toString, Seq("k"), Seq("ts"))
     store.upsert(kvBatch(("k1", "INSERT", 100L)), 1)
-    store.upsert(kvBatch(("k1", "UPDATE", 200L)), 2)
+    // a delta far larger than the one-row base: the next batch merges
+    store.upsert(filler(500, 100L), 2)
+    store.upsert(kvBatch(("k1", "UPDATE", 200L)), 3)
+    assert(pointerOf(dir) == "v3")
     val state = store.current(spark).get.collect().toSet
-    // simulate the crash window: pointer already at v2, marker missing
-    Files.delete(dir.resolve("_committed_2"))
-    store.upsert(kvBatch(("k1", "UPDATE", 200L)), 2) // replay must be a no-op
+    // simulate the crash window: pointer already at v3, marker missing
+    Files.delete(dir.resolve("_committed_3"))
+    store.upsert(kvBatch(("k1", "UPDATE", 200L)), 3) // replay must be a no-op
     assert(store.current(spark).get.collect().toSet == state)
-    assert(Files.exists(dir.resolve("_committed_2")), "marker backfilled")
+    assert(Files.exists(dir.resolve("_committed_3")), "marker backfilled")
   }
 
-  test("upsert store: prunes versions older than the previous batch") {
+  test("upsert store: a merge prunes bases before the previous one and deltas below it") {
     val dir = Files.createTempDirectory("graft-prune")
     val store = new UpsertStateStore(dir.toString, Seq("k"), Seq("ts"))
-    (1L to 5L).foreach(b => store.upsert(kvBatch(("k1", "INSERT", b * 100)), b))
-    val names = Files.list(dir).map[String](_.getFileName.toString)
-      .toArray.map(_.toString).toSet
-    assert(!names.exists(n => n == "v1" || n == "v2" || n == "v3"))
-    assert(names.contains("v4") && names.contains("v5"))
-    assert(store.current(spark).get.select("ts").as[Long].head() == 500L)
+    var bases = Vector.empty[String]
+    (1L to 12L).foreach { b =>
+      val batch = kvBatch(("k1", "INSERT", b * 100))
+      store.upsert(if (b % 3 == 2) batch.unionByName(filler(2000, b)) else batch, b)
+      if (pointerOf(dir) == s"v$b") {
+        bases :+= s"v$b"
+        val names = entries(dir)
+        assert(names.filter(_.matches("v\\d+")) subsetOf bases.takeRight(2).toSet,
+          s"after the merge at $b: $names")
+        assert(!names.exists(n => n.matches("d\\d+") && n.tail.toLong <= b),
+          s"after the merge at $b: $names")
+      }
+    }
+    assert(bases.size >= 3, s"merges: $bases")
+    assert(store.current(spark).get.filter($"k" === "k1")
+      .select("ts").as[Long].head() == 1200L)
+  }
+
+  test("upsert store: a small batch over a 10k-row base writes only its " +
+      "delta, in one job") {
+    val dir = Files.createTempDirectory("graft-delta")
+    val store = new UpsertStateStore(dir.toString, Seq("k"), Seq("ts"))
+    store.upsert(filler(10000, 100L), 1)
+    val pointer = pointerOf(dir)
+    def baseFiles() = entries(dir.resolve(pointer)).map { n =>
+      val p = dir.resolve(pointer).resolve(n)
+      (n, Files.size(p), Files.getLastModifiedTime(p))
+    }
+    val before = baseFiles()
+    val jobs = jobPropertiesOf(store.upsert(
+      kvBatch(("f1", "UPDATE", 200L), ("new", "INSERT", 200L)), 2))
+    // the write is the only job: no state read, no schema inference
+    assert(jobs.size == 1, s"${jobs.size} jobs")
+    assert(pointerOf(dir) == pointer && baseFiles() == before)
+    val names = entries(dir)
+    assert(names("d2") && names("_committed_2") && !names("v2"))
+    val cur = store.current(spark).get
+    assert(cur.count() == 10001)
+    assert(cur.filter($"k" === "f1").select("ts").as[Long].head() == 200L)
+  }
+
+  test("upsert store: a batch merges exactly when the committed deltas' " +
+      "bytes reach the base's") {
+    val dir = Files.createTempDirectory("graft-threshold")
+    val store = new UpsertStateStore(dir.toString, Seq("k"), Seq("ts"))
+    store.upsert(filler(300, 100L), 1)
+    var merges = 0
+    var deltas = 0
+    (2L to 14L).foreach { b =>
+      val names = entries(dir)
+      val pending = names.filter(n => n.matches("d\\d+") &&
+        names(s"_committed_${n.tail}")).toSeq.map(n => dataBytes(dir.resolve(n))).sum
+      val merge = pending >= dataBytes(dir.resolve(pointerOf(dir)))
+      store.upsert(filler(40, b).withColumn("k",
+        concat($"k", lit(s"-$b"))), b)
+      assert(Files.exists(dir.resolve(s"v$b")) == merge, s"batch $b")
+      assert(Files.exists(dir.resolve(s"d$b")) == !merge, s"batch $b")
+      if (merge) merges += 1 else deltas += 1
+    }
+    assert(merges > 0 && deltas > 0, s"$merges merges, $deltas deltas")
+    assert(store.current(spark).get.count() == 300 + 13 * 40)
+  }
+
+  test("upsert store: a DELETE in a delta outranks an older late event, " +
+      "in a later delta and after a merge") {
+    val dir = Files.createTempDirectory("graft-delta-tomb")
+    val store = new UpsertStateStore(dir.toString, Seq("k"), Seq("ts"))
+    def keys() = store.current(spark).get.select("k").as[String].collect().toSet
+    store.upsert(filler(2000, 100L).unionByName(kvBatch(("k1", "INSERT", 100L))), 1)
+    store.upsert(kvBatch(("k1", "DELETE", 300L)), 2)
+    store.upsert(kvBatch(("k1", "UPDATE", 200L)), 3) // late, in a later delta
+    assert(Files.exists(dir.resolve("d2")) && Files.exists(dir.resolve("d3")))
+    assert(!keys()("k1"), "the delta's tombstone must outrank the late event")
+    store.upsert(filler(4000, 500L), 4) // a delta as large as the base
+    store.upsert(kvBatch(("k1", "UPDATE", 250L)), 5) // late; merges
+    assert(pointerOf(dir) == "v5" && !entries(dir).exists(_.startsWith("d")))
+    assert(!keys()("k1"), "the merged tombstone must outrank the late event")
+    // the tombstone is retained in the base, not dropped by the merge
+    assert(spark.read.parquet(dir.resolve("v5").toString)
+      .filter($"k" === "k1").select("event_type").as[String].collect()
+      .toSeq == Seq("DELETE"))
+    store.upsert(kvBatch(("k1", "INSERT", 400L)), 6) // a newer write revives
+    assert(keys()("k1"))
+  }
+
+  test("upsert store: a delta batch that crashed before its marker " +
+      "replays idempotently") {
+    val dir = Files.createTempDirectory("graft-delta-crash")
+    val store = new UpsertStateStore(dir.toString, Seq("k"), Seq("ts"))
+    store.upsert(filler(2000, 100L), 1)
+    val batch = kvBatch(("f1", "UPDATE", 200L), ("new", "INSERT", 200L))
+    store.upsert(batch, 2)
+    // simulate the crash: delta written (partly), marker missing
+    Files.delete(dir.resolve("_committed_2"))
+    Files.write(dir.resolve("d2").resolve("part-torn.parquet"), Array[Byte](1, 2))
+    val cur = store.current(spark).get
+    assert(cur.count() == 2000, "an uncommitted delta is invisible")
+    assert(cur.filter($"k" === "f1").select("ts").as[Long].head() == 100L)
+    store.upsert(batch, 2)
+    store.upsert(batch, 2) // committed: a no-op
+    val after = store.current(spark).get
+    assert(after.count() == 2001)
+    assert(after.filter($"k" === "f1").select("ts").as[Long].collect()
+      .toSeq == Seq(200L))
+    assert(store.committed(2) && !Files.exists(dir.resolve("v2")))
+  }
+
+  test("upsert store: a batch that changes a column type merges, and " +
+      "later deltas use the widened type") {
+    val dir = Files.createTempDirectory("graft-widen")
+    val store = new UpsertStateStore(dir.toString, Seq("k"), Seq("ts"))
+    store.upsert(filler(2000, 100L).withColumn("ts", $"ts".cast("int")), 1)
+    // small enough for a delta, but ts no longer fits the stored INT
+    store.upsert(kvBatch(("k1", "INSERT", 5000000000L)), 2)
+    assert(pointerOf(dir) == "v2" && !Files.exists(dir.resolve("d2")))
+    store.upsert(kvBatch(("k2", "INSERT", 6000000000L)), 3)
+    assert(Files.exists(dir.resolve("d3")))
+    val cur = store.current(spark).get
+    assert(cur.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+    assert(cur.count() == 2002)
+    assert(cur.filter($"k".isin("k1", "k2")).select("ts").as[Long].collect()
+      .toSet == Set(5000000000L, 6000000000L))
+  }
+
+  test("currentState ranks same-timestamp events by event_id, as the " +
+      "writer does, across base and delta") {
+    val dir = Files.createTempDirectory("graft-tie").toString
+    def rows(r: (String, String)*) = r.map { case (user, id) =>
+      ("ecommerce", "users", s"ecommerce.users:user_id=$user:", id, "UPDATE",
+        1000L)
+    }.toDF("keyspace", "table_name", "event_key_cols", "event_id",
+      "event_type", "timestamp_micros")
+    val store = CdcPipeline.stateStore(dir)
+    store.upsert(rows("u1" -> "e-b", "u2" -> "e-a"), 1) // the base
+    store.upsert(rows("u1" -> "e-a", "u2" -> "e-b"), 2) // a delta
+    assert(Files.exists(Paths.get(dir, "d2")))
+    val winners = CdcPipeline.currentState(spark, dir).get
+      .select("event_key_cols", "event_id").as[(String, String)].collect()
+    assert(winners.toMap == Map("ecommerce.users:user_id=u1:" -> "e-b",
+      "ecommerce.users:user_id=u2:" -> "e-b"), winners.toSeq)
   }
 
   test("maskEnvelope compiles with an empty PHI or PII field list") {
@@ -288,9 +442,8 @@ class StreamingSpec extends SparkSpec {
     // the unsupported-typed event went to the DLQ, not the warehouse
     assert(DlqSink.count(spark, dlqDir, "typed-warehouse") == 1)
     // the state store (schema-generation-agnostic) holds all three users
-    val store = new UpsertStateStore(base.resolve("state").toString,
-      Seq("event_key_cols"), Seq("timestamp_micros"))
-    assert(store.current(spark).get.count() == 3)
+    assert(CdcPipeline.currentState(spark, base.resolve("state").toString)
+      .get.count() == 3)
     // registry history records the lineage: v1 → v2, hashes distinct
     val hist = registry.history("ecommerce", "users")
     assert(hist.map(_.version) == List(1, 2))
@@ -367,9 +520,8 @@ class StreamingSpec extends SparkSpec {
     }
     drain() // restart from the same checkpoint drains the backlog
 
-    val store = new UpsertStateStore(base.resolve("state").toString,
-      Seq("event_key_cols"), Seq("timestamp_micros"))
-    def stateSnapshot() = store.current(spark).get
+    def stateSnapshot() =
+      CdcPipeline.currentState(spark, base.resolve("state").toString).get
       .select(col("event_key_cols"),
         element_at(col("columns"), "phone").as("phone"),
         element_at(col("columns"), "age").as("age"))
