@@ -446,15 +446,16 @@ object Bench {
       if (sweep.isEmpty) 0 else sweep.maxBy(_._2)._1
     // connected-components diagnostics (VERDICT r12 item 3): the d06/
     // d25/q68 family is the only one whose quiet-window spread does not
-    // settle. CcProbe root-caused it: the fixpoint ROUND COUNT is
-    // constant for a fixed corpus (2 at sf0.1, logged here per round as
-    // proof), and each round is a chain of short jobs (2 shuffle joins +
-    // eager localCheckpoint + count ≈ 0.33 s/round on 5k rows — fixed
-    // scheduling cost, not data), so the bench-time spread is ambient
-    // jitter amplified across ~10 short jobs while the pack contends for
-    // cores — quiet-machine full-run spread is ±0.3 s over 8 reps.
+    // settle. Its root cause (OPTIMIZATION_r17.md, cc family): the
+    // fixpoint ROUND COUNT is constant for a fixed corpus (2 at sf0.1,
+    // logged here per round as proof), and each round is a chain of
+    // short jobs (2 shuffle joins + eager localCheckpoint + count ≈
+    // 0.33 s/round on 5k rows — fixed scheduling cost, not data), so the
+    // bench-time spread is ambient jitter amplified across ~10 short
+    // jobs while the pack contends for cores — quiet-machine full-run
+    // spread is ±0.3 s over 8 reps.
     // A regression in THIS family would surface as a moved cc_rounds or
-    // a moved quiet-machine CcProbe median, not in the pack spread.
+    // cc_prop_sec, not in the pack spread.
     val ccJson = try {
       val pairs = graft.operators.Dedup.minhashLsh(spark, sfDir)
         .select(org.apache.spark.sql.functions.col("da"),

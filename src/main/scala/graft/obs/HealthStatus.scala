@@ -9,7 +9,10 @@ import scala.jdk.CollectionConverters._
   * overall state degrades to the worst member. The reference's binary
   * up/down is extended with the sink DEGRADED threshold it tracks
   * separately (`src/models/destination_sink.py:67-72`): up but slower
-  * than 1000 ms ⇒ DEGRADED.
+  * than 1000 ms ⇒ DEGRADED. Slower means the median of the dependency's
+  * last [[HealthStatus.Window]] latency samples, so one slow sample (a
+  * cold first write, a host-load spike) does not flip the state; a
+  * `down` report counts at once.
   *
   * Rendered as the `/health` JSON body (`health.py:66-84` `to_dict`);
   * serving it over HTTP is one `HttpServer` binding away and out of the
@@ -19,13 +22,20 @@ final class HealthStatus(version: String = "1.0.0") {
 
   val DegradedThresholdMs = 1000L
 
-  private case class Dep(status: String, latencyMs: Double, lastCheckMs: Long)
+  /** `recentMs`: the last [[HealthStatus.Window]] latencies, newest last. */
+  private case class Dep(status: String, recentMs: Vector[Double], lastCheckMs: Long) {
+    def latencyMs: Double = recentMs.last
+    /** The lower median, so a window still filling reads its faster half. */
+    def medianMs: Double = recentMs.sorted.apply((recentMs.size - 1) / 2)
+  }
   private val deps = new ConcurrentHashMap[String, Dep]()
   private val startMs = System.currentTimeMillis()
 
   /** `health.py:31-48`: record one dependency check. */
   def update(name: String, up: Boolean, latencyMs: Double): Unit = {
-    deps.put(name, Dep(if (up) "up" else "down", latencyMs,
+    deps.compute(name, (_, prev) => Dep(if (up) "up" else "down",
+      (Option(prev).fold(Vector.empty[Double])(_.recentMs) :+ latencyMs)
+        .takeRight(HealthStatus.Window),
       System.currentTimeMillis()))
     ()
   }
@@ -35,7 +45,7 @@ final class HealthStatus(version: String = "1.0.0") {
     Option(deps.get(name)) match {
       case None => "UNKNOWN"
       case Some(d) if d.status == "down" => "UNHEALTHY"
-      case Some(d) if d.latencyMs > DegradedThresholdMs => "DEGRADED"
+      case Some(d) if d.medianMs > DegradedThresholdMs => "DEGRADED"
       case Some(_) => "HEALTHY"
     }
 
@@ -72,6 +82,9 @@ final class HealthStatus(version: String = "1.0.0") {
 }
 
 object HealthStatus {
+  /** Latency samples per dependency that DEGRADED is judged from. */
+  val Window = 3
+
   /** One shared mapper: construction is heavyweight and the instance is
     * thread-safe for this usage — building one per `/health` request put
     * avoidable latency on exactly the probe path. */

@@ -513,7 +513,7 @@ object Multimodal {
   /** m05's aHash fingerprint per BMP asset, keyed into the image
     * vec_id space — the EXACT visual-duplicate truth m12 audits the
     * index against. */
-  private def imageAhash(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def imageAhash(s: SparkSession, dir: String): DataFrame = {
     val px = resize(decodeAll(bmpAssets(s, dir)).filter(_.fmt == "bmp"),
       target = 64)
     px.select((col("doc_id") / 2).cast("long").as("vec_id"),
@@ -524,11 +524,6 @@ object Multimodal {
           p => when(p * 64 > col("st"), "1").otherwise("0")), "")
           .as("ahash"))
   }
-
-  /** [[imageAhash]] surfaced for the DupProbe dev tool (query-set
-    * faithfulness measurement on synthesized corpora). */
-  private[graft] def imageAhashProbe(s: SparkSession, dir: String): DataFrame =
-    imageAhash(s, dir)
 
   /** Exact-duplicate image pairs (directed, both directions): same
     * aHash, different asset. */

@@ -17,9 +17,9 @@ import graft.operators.Similarity
   * on the CURRENT corpus, builds the green index offline via the s20
   * shard path (frozen artifacts shipped to shard builders, merge = list
   * concatenation), and then swaps the pointer ATOMICALLY (temp-write +
-  * overwrite-rename, the AppendVersionedSink move) — serving never sees
-  * a half-built index, and queries in flight finish on the generation
-  * their micro-batch started on.
+  * overwrite-rename, as UpsertStateStore swaps `_LATEST`) — serving
+  * never sees a half-built index, and queries in flight finish on the
+  * generation their micro-batch started on.
   *
   * Shape at 100 TB: the build runs beside serving (blue keeps
   * answering), shard encodes are embarrassingly parallel per-vector

@@ -24,14 +24,14 @@ final case class VecChange(seq: Long, vecId: Long, op: String,
   * as tombstone rows. Both sides write `batch_id=N` overwrite
   * partitions — idempotent under crash replay.
   *
-  * The read view ([[readIndex]]) resolves versions exactly like
-  * [[graft.sinks.AppendVersionedSink]]'s dedup view: per vector the
-  * highest-`seq` event wins; a winning tombstone removes the vector, a
-  * winning upsert serves its (single) encode. [[compact]] materializes
-  * the view into a reserved `batch_id=-1` base partition and RETAINS
-  * the still-winning tombstones (the AppendVersionedSink rule: a
-  * replayed pre-compaction batch must still find the tombstone that
-  * outranks it, or deleted keys resurrect) — the OPTIMIZE FINAL analog
+  * The read view ([[readIndex]]) resolves versions by the last-write-wins
+  * rule of [[UpsertStateStore]]: per vector the highest-`seq` event
+  * wins; a winning tombstone removes the vector, a winning upsert
+  * serves its (single) encode. [[compact]] materializes the view into a
+  * reserved `batch_id=-1` base partition and RETAINS the still-winning
+  * tombstones (the store's rule: a replayed pre-compaction batch must
+  * still find the tombstone that outranks it, or deleted keys
+  * resurrect) — the OPTIMIZE FINAL analog
   * for the index. Resuming maintenance onto the compacted pair with a
   * fresh checkpoint is safe: streaming batch ids start at 0 and never
   * touch the base partition.

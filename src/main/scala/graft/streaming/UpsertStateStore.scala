@@ -8,12 +8,17 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import graft.ops.LatestState
 
-/** A last-write-wins upsert table over parquet: a merged base plus
-  * per-batch deltas, merged on read (the ReplacingMergeTree shape).
+/** A last-write-wins table over parquet: a merged base plus per-batch
+  * deltas, merged on read (the ReplacingMergeTree shape).
   *
-  * Plays the role of the reference's idempotent warehouse upsert
-  * (`INSERT ... ON CONFLICT (pk) DO UPDATE`, `src/sinks/postgres.py:119-132`)
-  * plus delete propagation (`postgres.py:93-101`) for the pure-Spark slice.
+  * It plays both of the reference's destinations, one write policy each:
+  *  - [[upsert]]: the idempotent warehouse upsert (`INSERT ... ON CONFLICT
+  *    (pk) DO UPDATE`, `src/sinks/postgres.py:119-132`) plus delete
+  *    propagation (`postgres.py:93-101`). It merges by size (below).
+  *  - [[append]]: the ClickHouse append that ReplacingMergeTree collapses
+  *    by key (`src/sinks/clickhouse.py:81-145`). It never merges by size,
+  *    so a trigger touches O(1) files; the deltas pile up until an
+  *    explicit [[compact]] (`OPTIMIZE FINAL`) folds them.
   *
   * Layout under `tableDir`:
   *  - `v<id>/`: the merged base, one winner row per key, written by the
@@ -34,7 +39,7 @@ import graft.ops.LatestState
   * a merge's commit point; its replay is recognized by the marker or by
   * the pointer already naming `v<batchId>` (a crash can land between the
   * two; re-merging then would overwrite the directory the pointer reads
-  * from). The first batch always merges.
+  * from). The first batch always merges, under both policies.
   *
   * [[current]] takes the latest row per key over base + committed deltas.
   * Both operations are pure functions of (stored rows ∪ batch) under
@@ -46,15 +51,17 @@ import graft.ops.LatestState
   * filtered at the [[current]] read boundary; a production deploy ages
   * tombstones out past the source's lateness horizon.
   *
-  * Cost: a delta batch costs O(batch). A merge costs O(state) and runs
-  * once the deltas have grown to the base's size, so a batch costs
-  * O(batch) amortized, and a read scans at most twice the base. A merge
-  * prunes every delta and marker it folded and every base but the new and
-  * the previous one (readers that resolved the pointer just before the
-  * swap keep their base), so disk stays at O(2 × state + deltas). A
-  * reader's frame stays valid until the next merge. In production this
-  * store would be a Delta/Iceberg MERGE; the semantics here are identical
-  * and the interface (`upsert(df, batchId)`) matches that swap-in.
+  * Cost: a delta batch costs O(batch). Under [[upsert]] a merge costs
+  * O(state) and runs once the deltas have grown to the base's size, so a
+  * batch costs O(batch) amortized, and a read scans at most twice the
+  * base. Under [[append]] a read scans every delta since the last
+  * [[compact]]. A merge prunes every delta and marker it folded and every
+  * base but the new and the previous one (readers that resolved the
+  * pointer just before the swap keep their base), so disk stays at
+  * O(2 × state + deltas). A reader's frame stays valid until the next
+  * merge. In production this store would be a Delta/Iceberg MERGE; the
+  * semantics here are identical and the interface (`upsert(df, batchId)`)
+  * matches that swap-in.
   */
 final class UpsertStateStore(
     val tableDir: String,
@@ -123,8 +130,7 @@ final class UpsertStateStore(
   /** Live rows (tombstones filtered) — the read surface. Null-safe: a row
     * whose delete-marker column is null (e.g. a payload that lost the field
     * round-tripping through the JSON DLQ and was replayed here) is LIVE —
-    * a bare `=!=` would evaluate to null and silently drop it (same
-    * coalesce guard as AppendVersionedSink.view). */
+    * a bare `=!=` would evaluate to null and silently drop it. */
   def current(spark: SparkSession): Option[DataFrame] =
     latestVersion.map { base =>
       val pending = deltas
@@ -134,8 +140,27 @@ final class UpsertStateStore(
         .filter(coalesce(col(isDeleteCol) =!= deleteValue, lit(true)))
     }
 
-  /** Add one micro-batch; safe to replay. */
-  def upsert(batch: DataFrame, batchId: Long): Unit = {
+  /** Add one micro-batch, merging once the pending deltas have grown to
+    * the base's size; safe to replay. */
+  def upsert(batch: DataFrame, batchId: Long): Unit =
+    write(batch, batchId, mergeDue = base => deltas.map(dataBytes).sum >= dataBytes(base))
+
+  /** Add one micro-batch as a delta; merge only to lay down the first base
+    * or to widen a changed column type. Lists no deltas, so its filesystem
+    * cost stays O(1) however many are pending; [[compact]] folds them.
+    * Safe to replay. */
+  def append(batch: DataFrame, batchId: Long): Unit =
+    write(batch, batchId, mergeDue = _ => false)
+
+  /** Fold every committed delta into a new base (ClickHouse's `OPTIMIZE
+    * FINAL`), named after the newest folded batch; a no-op without
+    * deltas. Tombstones stay in the base as in every merge. */
+  def compact(spark: SparkSession): Unit = (latestVersion, deltas.lastOption) match {
+    case (Some(base), Some(Delta(last))) => merge(spark, None, last.toLong, Some(base))
+    case _ => ()
+  }
+
+  private def write(batch: DataFrame, batchId: Long, mergeDue: String => Boolean): Unit = {
     if (committed(batchId)) return
     val base = latestVersion
     if (base.contains(s"v$batchId")) {
@@ -145,14 +170,12 @@ final class UpsertStateStore(
       Files.write(marker(batchId), Array.emptyByteArray)
       return
     }
-    val pending = deltas
     (base, storedSchema) match {
-      case (Some(b), Some(s)) if sameTypes(batch.schema, s) &&
-          pending.map(dataBytes).sum < dataBytes(b) =>
+      case (Some(b), Some(s)) if sameTypes(batch.schema, s) && !mergeDue(b) =>
         batch.select(s.fieldNames.toSeq.map(col): _*)
           .write.mode("overwrite").parquet(root.resolve(s"d$batchId").toString)
         Files.write(marker(batchId), Array.emptyByteArray)
-      case _ => merge(batch, batchId, base, pending)
+      case _ => merge(batch.sparkSession, Some(batch), batchId, base)
     }
   }
 
@@ -166,13 +189,11 @@ final class UpsertStateStore(
         DataType.equalsStructurallyByName(b.dataType, f.dataType, _ == _)
     })
 
-  private def merge(batch: DataFrame, batchId: Long, base: Option[String],
-      pending: Seq[String]): Unit = {
-    val unioned = base match {
-      case Some(b) =>
-        val cur = stored(batch.sparkSession, b, pending)
-        cur.unionByName(batch.select(cur.columns.toSeq.map(col): _*))
-      case None => batch
+  /** Base + committed deltas (+ `batch`) into a new base `v<batchId>`. */
+  private def merge(spark: SparkSession, batch: Option[DataFrame], batchId: Long,
+      base: Option[String]): Unit = {
+    val unioned = (base.map(stored(spark, _, deltas)) ++ batch).reduce { (cur, df) =>
+      cur.unionByName(df.select(cur.columns.toSeq.map(col): _*))
     }
     // keep DELETE winners as tombstones (filtered in current()) so a late
     // event older than the delete loses the next merge instead of

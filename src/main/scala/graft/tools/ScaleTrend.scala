@@ -650,8 +650,8 @@ object ScaleTrend {
 
 - **m11/m12's first-decade level shift is corpus structure — now with
   the mechanism MEASURED, correcting r13's digit hypothesis.** The
-  driver corpora contain no digits at all; DupProbe found the real
-  cause: the aHash thresholds resized pixels against the mean, making
+  test corpora contain no digits at all; a probe of the dup-query
+  set found the real cause: the aHash thresholds resized pixels against the mean, making
   it a function of the text's SPACE SKELETON, and every character
   bijection preserves space positions exactly — so on a 10×
   enlargement dup pairs grow 1 → 6,977 with ALL pairs cross-replica

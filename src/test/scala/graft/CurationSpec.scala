@@ -732,7 +732,7 @@ class CurationSpec extends SparkSpec {
     val feats = Multimodal.imageFeatures(spark, sf).collect()
       .map(r => r.getAs[Long]("vec_id") ->
         r.getSeq[Float](r.fieldIndex("embedding")).toVector).toMap
-    val hashes = Multimodal.imageAhashProbe(spark, sf).collect()
+    val hashes = Multimodal.imageAhash(spark, sf).collect()
       .map(r => r.getAs[Long]("vec_id") -> r.getAs[String]("ahash")).toMap
     assert(fused.nonEmpty)
     assert(fused.keySet == feats.keySet && fused.keySet == hashes.keySet)

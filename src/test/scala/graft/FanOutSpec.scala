@@ -1,7 +1,9 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sinks.{AppendVersionedSink, DlqSink, Retry, RetryPolicy}
 import graft.streaming.{FanOut, UpsertStateStore}
@@ -13,23 +15,39 @@ import graft.streaming.{FanOut, UpsertStateStore}
 class FanOutSpec extends SparkSpec {
   import spark.implicits._
 
+  /** A plain parquet append: every delivered row lands, duplicates
+    * included, so row counts measure FanOut's exactly-once delivery
+    * rather than a last-write-wins table's collapse. */
+  private class AppendLog(dir: String) {
+    def append(batch: DataFrame, batchId: Long): Unit =
+      batch.withColumn("_batch_id", lit(batchId)).write.mode("append").parquet(dir)
+    def raw(spark: SparkSession): DataFrame = spark.read.parquet(dir)
+  }
+
   test("versioned-sink compaction rewrites to the dedup view; appends keep working") {
     val tmp = Files.createTempDirectory("graft-compact")
-    val sink = new AppendVersionedSink(s"$tmp/t", Seq("user_id"),
+    val dir = Paths.get(s"$tmp/t")
+    val sink = new AppendVersionedSink(dir.toString, Seq("user_id"),
       "timestamp_micros")
     sink.append(Seq(("u1", "INSERT", 100L), ("u2", "INSERT", 110L))
       .toDF("user_id", "event_type", "timestamp_micros"), batchId = 1L)
     sink.append(Seq(("u1", "UPDATE", 200L), ("u2", "DELETE", 300L))
       .toDF("user_id", "event_type", "timestamp_micros"), batchId = 2L)
-    val before = sink.view(spark).collect()
+    def view = sink.view(spark).orderBy("user_id").collect().toSeq
+    val before = view
 
     sink.compact(spark)
-    // storage collapsed to one winner row per key — u1's latest plus u2's
-    // DELETE tombstone (retained: see compact scaladoc); view unchanged
-    assert(sink.raw(spark).count() == 2)
-    assert(sink.view(spark).collect().toSeq == before.toSeq)
-    // a replayed OLDER insert for the deleted key must NOT resurrect it:
-    // the retained tombstone (ts 300) outranks the replay (ts 110)
+    // storage collapsed to the base `_LATEST` names, one winner row per
+    // key — u1's latest plus u2's DELETE tombstone (retained: see compact
+    // scaladoc) — with no delta left; view unchanged
+    val entries = Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(!entries.exists(_.matches("d\\d+")), entries)
+    val base = new String(Files.readAllBytes(dir.resolve("_LATEST"))).trim
+    assert(spark.read.parquet(dir.resolve(base).toString).count() == 2)
+    assert(view == before)
+    // a replayed OLDER insert for the deleted key, under a batch id the
+    // compaction folded (its marker pruned), must NOT resurrect it: the
+    // retained tombstone (ts 300) outranks the replay (ts 110)
     sink.append(Seq(("u2", "INSERT", 110L))
       .toDF("user_id", "event_type", "timestamp_micros"), batchId = 1L)
     assert(sink.view(spark).filter($"user_id" === "u2").isEmpty)
@@ -46,13 +64,11 @@ class FanOutSpec extends SparkSpec {
     val dlqDir = s"$tmp/dlq"
     val store = new UpsertStateStore(s"$tmp/state", Seq("user_id"),
       Seq("timestamp_micros"))
-    val versioned = new AppendVersionedSink(s"$tmp/versioned", Seq("user_id"),
-      "timestamp_micros")
+    val versioned = new AppendLog(s"$tmp/versioned")
     // flaky gets its OWN directory: concurrent appends into one parquet
     // path share the _temporary staging dir and corrupt each other (see
     // FanOut scaladoc — destinations must not share output paths)
-    val flakySink = new AppendVersionedSink(s"$tmp/flaky", Seq("user_id"),
-      "timestamp_micros")
+    val flakySink = new AppendLog(s"$tmp/flaky")
 
     val batch = Seq(
       ("u1", "INSERT", 100L), ("u2", "INSERT", 110L), ("u1", "UPDATE", 120L))
@@ -169,10 +185,8 @@ class FanOutSpec extends SparkSpec {
     }
 
     val health = new HealthStatus()
-    val versioned = new AppendVersionedSink(s"$tmp/versioned", Seq("event_key_cols"),
-      "timestamp_micros")
-    val slowSink = new AppendVersionedSink(s"$tmp/slowdest", Seq("event_key_cols"),
-      "timestamp_micros")
+    val versioned = new AppendLog(s"$tmp/versioned")
+    val slowSink = new AppendLog(s"$tmp/slowdest")
     @volatile var injectedLatencyMs = 1200L // above HealthStatus.DegradedThresholdMs
     val batchRows = new ConcurrentLinkedQueue[Long]()
     val dests = Seq(
@@ -270,12 +284,10 @@ class FanOutSpec extends SparkSpec {
     }
 
     val health = new HealthStatus()
-    val steady = new AppendVersionedSink(s"$tmp/steady", Seq("event_key_cols"),
-      "timestamp_micros")
-    val fragile = new AppendVersionedSink(s"$tmp/fragile", Seq("event_key_cols"),
-      "timestamp_micros")
-    // Destinations store a stable, JSON-safe projection (the columns the
-    // versioned sink keys/orders on): dead letters round-trip through the
+    val steady = new AppendLog(s"$tmp/steady")
+    val fragile = new AppendLog(s"$tmp/fragile")
+    // Destinations store a stable, JSON-safe projection (the key, version
+    // and id columns): dead letters round-trip through the
     // JSONL DLQ, so a replayed frame must re-append with the exact types
     // the live appends wrote (timestamps/maps would come back as strings)
     def proj(df: org.apache.spark.sql.DataFrame) = df.select(

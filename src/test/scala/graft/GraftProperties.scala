@@ -192,25 +192,44 @@ object GraftProperties extends Properties("graft") {
   private def once(p: Prop): Prop =
     p.map(r => if (r.status == Prop.True) r.copy(status = Prop.Proof) else r)
 
+  /** How the property writes a stream's batches into the store. */
+  private sealed trait WritePolicy
+  private case object Upsert extends WritePolicy
+  private case object Append extends WritePolicy
+  /** `append`, with a `compact` after the batch at this index. */
+  private final case class AppendCompactAfter(batch: Int) extends WritePolicy
+
   property("upsert store over random batches == LatestState over all events") =
-    once(Prop.forAllNoShrink(Gen.listOfN(4, genStream)) { cases =>
+    once(Prop.forAllNoShrink(Gen.listOfN(4, Gen.zip(genStream, Gen.choose(0, 8)))) { cases =>
       val spark = SparkSpec.session
       import spark.implicits._
       import org.apache.spark.sql.functions.col
       val cols = Seq("k", "typ", "ts", "id")
-      cases.forall { case (evs, cuts) =>
-        val dir = java.nio.file.Files.createTempDirectory("graft-prop").toString
-        val store = new graft.streaming.UpsertStateStore(dir, Seq("k"),
-          Seq("ts", "id"), isDeleteCol = "typ", deleteValue = "D")
+      cases.forall { case ((evs, cuts), compactAt) =>
         val bounds = (0 +: cuts :+ evs.length).distinct
-        bounds.zip(bounds.tail).zipWithIndex.foreach { case ((a, b), batchId) =>
-          store.upsert(evs.slice(a, b).toDF(cols: _*), batchId.toLong)
-        }
+        val batches = bounds.zip(bounds.tail)
         val model = graft.ops.LatestState.materialize(evs.toDF(cols: _*),
           Seq(col("k")), Seq(col("ts"), col("id")), col("typ") === "D")
         def rows(df: org.apache.spark.sql.DataFrame) =
           df.as[(String, String, Long, String)].collect().toSet
-        rows(store.current(spark).get) == rows(model)
+        val policies = Seq(Upsert, Append, AppendCompactAfter(compactAt % batches.size))
+        policies.forall { policy =>
+          val dir = java.nio.file.Files.createTempDirectory("graft-prop").toString
+          // one (ts, id) order for every policy keeps the model deterministic
+          val store = new graft.streaming.UpsertStateStore(dir, Seq("k"),
+            Seq("ts", "id"), isDeleteCol = "typ", deleteValue = "D")
+          batches.zipWithIndex.foreach { case ((a, b), batchId) =>
+            val batch = evs.slice(a, b).toDF(cols: _*)
+            policy match {
+              case Upsert => store.upsert(batch, batchId.toLong)
+              case Append => store.append(batch, batchId.toLong)
+              case AppendCompactAfter(at) =>
+                store.append(batch, batchId.toLong)
+                if (batchId == at) store.compact(spark)
+            }
+          }
+          rows(store.current(spark).get) == rows(model)
+        }
       }
     })
 

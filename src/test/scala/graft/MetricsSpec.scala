@@ -120,6 +120,12 @@ class MetricsSpec extends SparkSpec {
     assert(health.overall == "degraded")
     health.update("slow", up = true, latencyMs = 20.0)
     assert(health.overall == "healthy")
+
+    // one slow write among fast ones: the median of the last 3 samples
+    // (450 ms) is under the threshold, though the latest (1180 ms) is over
+    Seq(400.0, 450.0, 1180.0).foreach(ms =>
+      health.update("jittery", up = true, latencyMs = ms))
+    assert(health.dependencyState("jittery") == "HEALTHY")
   }
 
   test("tracing on: one micro_batch span per progress event, sizes add up") {

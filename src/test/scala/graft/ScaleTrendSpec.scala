@@ -65,8 +65,8 @@ class ScaleTrendSpec extends SparkSpec {
       "vowel rotation must preserve text length")
 
     // the driver corpora carry no digits (verified — the r13 study's
-    // "digit collision" hypothesis for m11/m12 was wrong; DupProbe
-    // found the real mechanism, the aHash's space-skeleton invariance
+    // "digit collision" hypothesis for m11/m12 was wrong; SCALETREND.md
+    // records the real mechanism, the aHash's space-skeleton invariance
     // under ANY char bijection), so the digit-permutation machinery is
     // asserted on a purpose-built digit-bearing source below
 

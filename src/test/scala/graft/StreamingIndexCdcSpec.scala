@@ -101,7 +101,7 @@ class StreamingIndexCdcSpec extends SparkSpec {
         == oneShot, "a replayed batch must change nothing")
 
       // compaction erases superseded history but RETAINS winning
-      // tombstones (the AppendVersionedSink rule)
+      // tombstones (the UpsertStateStore rule)
       val compactIdx = base.resolve("compacted-index").toString
       val compactTomb = base.resolve("compacted-tomb").toString
       StreamingIndexCdc.compact(spark, indexDir, tombDir, compactIdx,
