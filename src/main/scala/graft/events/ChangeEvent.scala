@@ -100,13 +100,15 @@ object ChangeEvent {
   /** Envelope-level validation (`src/transform/validator.py:66-106`):
     * known event type, keyspace/table present, partition key non-empty,
     * DELETE must carry no regular columns (contract
-    * `event-schema.json:73-89`). Returns (valid, invalid-with-reason). */
-  def validate(df: DataFrame): (DataFrame, DataFrame) = {
+    * `event-schema.json:73-89`). The first rule an envelope breaks, or
+    * NULL for a valid one, so `count(invalidReason)` counts the invalid
+    * rows. */
+  def invalidReason: Column =
     // every predicate is explicitly null-safe: from_json yields NULL for
     // missing fields regardless of nullable=false, and a bare
     // `!isInCollection` evaluates to NULL on a NULL input — the `when`
     // would fall through and wave the broken event into the VALID output
-    val reason = when(col("event_type").isNull ||
+    when(col("event_type").isNull ||
         !col("event_type").isInCollection(EventTypes),
         lit("unknown event_type"))
       .when(col("keyspace").isNull || col("table_name").isNull,
@@ -118,7 +120,10 @@ object ChangeEvent {
       .when(col("event_type") === "DELETE" &&
         size(map_keys(coalesce(col("columns"), map()))) > 0,
         lit("DELETE with columns"))
-    val tagged = df.withColumn("_invalid_reason", reason)
+
+  /** Split `df` by [[invalidReason]]. Returns (valid, invalid-with-reason). */
+  def validate(df: DataFrame): (DataFrame, DataFrame) = {
+    val tagged = df.withColumn("_invalid_reason", invalidReason)
     (tagged.filter(col("_invalid_reason").isNull).drop("_invalid_reason"),
       tagged.filter(col("_invalid_reason").isNotNull))
   }

@@ -2,8 +2,12 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 import java.nio.charset.StandardCharsets
-import graft.streaming.{CdcPipeline, UpsertStateStore}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.SparkListenerJobStart
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import graft.streaming.{CdcPipeline, FanOut, UpsertStateStore}
 import graft.functions.MaskRules
+import graft.sinks.{AppendVersionedSink, HypertableSink}
 import org.apache.spark.sql.functions._
 
 /** End-to-end streaming slice (SURVEY §7.2): JSONL change events →
@@ -116,6 +120,82 @@ class StreamingSpec extends SparkSpec {
     runOnce()
     assert(Files.exists(commits.resolve("0")))
     assert(graft.sinks.DlqSink.count(spark, dlqUri, "state-store") == 1)
+  }
+
+  /** Data files under `dir`, recursively: no checksums, markers or
+    * `_SUCCESS`. */
+  private def dataFiles(dir: Path): Set[Path] =
+    if (!Files.exists(dir)) Set.empty
+    else {
+      val st = Files.walk(dir)
+      try st.iterator.asScala.filter { p =>
+        val n = p.getFileName.toString
+        Files.isRegularFile(p) && !n.startsWith(".") && !n.startsWith("_")
+      }.toSet
+      finally st.close()
+    }
+
+  test("a trigger writes one file per destination, each in one task") {
+    val base = Files.createTempDirectory("cdc-layout")
+    val events = Files.createDirectories(base.resolve("events"))
+    val versioned = new AppendVersionedSink(base.resolve("versioned").toString,
+      Seq("event_key_cols"), "timestamp_micros")
+    val hyper = base.resolve("hyper")
+    val q = CdcPipeline.start(spark, events.toString,
+      base.resolve("state").toString, base.resolve("ckpt").toString,
+      base.resolve("dlq").toString,
+      extraSinks = Seq(
+        FanOut.Destination("versioned", write = versioned.append),
+        FanOut.Destination("hypertable", write = (df, _) =>
+          HypertableSink.write(df, hyper.toString, "captured_at", "day"))))
+    try {
+      // the first trigger lays down both stores' bases
+      writeFile(events, "b1.json", Seq(eventJson("e0", "INSERT", "u0", "a@x.com", 1000)))
+      q.processAllAvailable()
+      val dests = Seq("state", "versioned", "hyper", "dlq").map(base.resolve)
+      val before = dests.map(dataFiles)
+      // 48 keys hash into all 4 of the dedup's partitions, so a write
+      // that follows the batch's layout lands 4 files
+      writeFile(events, "b2.json",
+        (1 to 48).map(i => eventJson(s"e$i", "INSERT", s"u$i", s"$i@x.com", 2000)) :+
+          """{"event_id":"bad","event_type":"INSERT","table_name":"users",
+            |"keyspace":"ecommerce","partition_key":{},"clustering_key":{},
+            |"columns":{},"timestamp_micros":5,"captured_at_micros":2000}"""
+            .stripMargin.replaceAll("\n", ""))
+      val seen = eventsOf(q.processAllAvailable())
+      val added = dests.zip(before).map { case (d, b) =>
+        (dataFiles(d) -- b).toSeq.map(f => d.relativize(f).getParent.toString)
+      }
+      val Seq(state, versionedDelta, bucket, dlq) = added
+      assert(state.size == 1 && state.head.matches("d\\d+"), state)
+      assert(versionedDelta.size == 1 && versionedDelta.head.matches("d\\d+"),
+        versionedDelta)
+      assert(bucket.size == 1 && bucket.head.startsWith("time_bucket="), bucket)
+      assert(dlq.size == 1 && dlq.head.startsWith("destination=state-store"), dlq)
+      assert(graft.sinks.DlqSink.count(spark, base.resolve("dlq").toString,
+        "state-store") == 1)
+      // each destination's write job, found by the output path its SQL
+      // execution names, runs one task (its last stage; the earlier one is
+      // the dedup's, skipped)
+      val plans = seen.collect { case s: SparkListenerSQLExecutionStart =>
+        s.executionId.toString -> s.physicalPlanDescription
+      }.toMap
+      def writeTaskCounts(dest: Path): Seq[Int] = seen.collect {
+        case j: SparkListenerJobStart if Option(j.properties)
+            .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+            .flatMap(plans.get)
+            .exists(p => p.contains("InsertIntoHadoopFsRelationCommand") &&
+              p.contains(dest.toString)) =>
+          j.stageInfos.maxBy(_.stageId).numTasks
+      }
+      dests.foreach(d => assert(writeTaskCounts(d) == Seq(1), d))
+    } finally q.stop()
+  }
+
+  test("writeTasks: one write task per RowsPerWriteTask rows, at least one") {
+    val n = CdcPipeline.RowsPerWriteTask
+    assert(Seq(0L, 1L, n, n + 1, 2 * n + 1).map(CdcPipeline.writeTasks) ==
+      Seq(1, 1, 1, 2, 3))
   }
 
   private def kvBatch(rows: (String, String, Long)*) =
