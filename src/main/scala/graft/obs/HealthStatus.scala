@@ -2,11 +2,16 @@ package graft.obs
 
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
+import graft.sinks.Retry
+import graft.streaming.FanOut
 
-/** Per-dependency health registry mirroring the reference's
+/** The pipeline's one health model, mirroring the reference's
   * `HealthStatus` (`src/observability/health.py:21-84`): each dependency
-  * (source + every destination sink) reports (status, latency); the
-  * overall state degrades to the worst member. The reference's binary
+  * reports (status, latency); the overall state degrades to the worst
+  * member. Dependencies are every destination sink, whose fan-out
+  * results arrive through [[record]], and every streaming query, which
+  * [[MetricsListener]] reports from progress and termination events, so
+  * both are judged by the same rules below. The reference's binary
   * up/down is extended with the sink DEGRADED threshold it tracks
   * separately (`src/models/destination_sink.py:67-72`): up but slower
   * than 1000 ms ⇒ DEGRADED. Slower means the median of the dependency's
@@ -14,9 +19,8 @@ import scala.jdk.CollectionConverters._
   * cold first write, a host-load spike) does not flip the state; a
   * `down` report counts at once.
   *
-  * Rendered as the `/health` JSON body (`health.py:66-84` `to_dict`);
-  * serving it over HTTP is one `HttpServer` binding away and out of the
-  * engine's scope — the demo main prints it.
+  * Rendered as the `/health` JSON body (`health.py:66-84` `to_dict`),
+  * which [[ObsHttpServer]] serves.
   */
 final class HealthStatus(version: String = "1.0.0") {
 
@@ -39,6 +43,13 @@ final class HealthStatus(version: String = "1.0.0") {
       System.currentTimeMillis()))
     ()
   }
+
+  /** One fan-out's results: a destination is up when its retried write
+    * succeeded, and the write's duration is its latency. */
+  def record(results: Seq[FanOut.FanOutResult]): Unit =
+    results.foreach(r => update(r.destination,
+      up = r.outcome.isInstanceOf[Retry.Succeeded[_]],
+      latencyMs = r.durationMs.toDouble))
 
   /** HEALTHY / DEGRADED / UNHEALTHY for one dependency. */
   def dependencyState(name: String): String =

@@ -1,5 +1,6 @@
 package graft.obs
 
+import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicLong, DoubleAdder}
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -10,20 +11,19 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   * `cdc_events_processed_total`, `cdc_events_per_second`,
   * `cdc_replication_duration_seconds`, `cdc_errors_total`,
   * `cdc_backlog_depth` — fed from Spark's `StreamingQueryListener`
-  * progress events instead of hand-maintained counters. Sink-health
-  * states mirror `DestinationSink` (`src/models/destination_sink.py:
-  * 14-20, 67-72`): DEGRADED above 1000 ms batch duration, UNHEALTHY on
-  * error.
+  * progress events instead of hand-maintained counters.
+  *
+  * Each streaming query is also a dependency of `health`, named by the
+  * query's name or, when it has none, its id: a progress event reports
+  * it up with the trigger's duration as latency, and a termination with
+  * an exception reports it down. `health` judges it by the same rules as
+  * a destination (see [[HealthStatus]]). A restart under the same id
+  * reports nothing until its first progress, so a failure stays visible
+  * until the restarted query has run a trigger; a clean stop keeps the
+  * query's last state.
   */
-final class MetricsListener extends StreamingQueryListener {
-
-  sealed trait Health
-  case object Healthy extends Health
-  case object Degraded extends Health
-  case object Unhealthy extends Health
-  case object Unknown extends Health
-
-  val DegradedThresholdMs = 1000L // destination_sink.py:67-72
+final class MetricsListener(health: HealthStatus = new HealthStatus())
+    extends StreamingQueryListener {
 
   private val processedTotal = new AtomicLong(0)
   private val errorsTotal = new AtomicLong(0)
@@ -31,18 +31,16 @@ final class MetricsListener extends StreamingQueryListener {
   private val batches = new AtomicLong(0)
   @volatile private var lastEventsPerSecond: Double = 0.0
   @volatile private var lastBacklog: Long = 0
-  // health PER QUERY: a single shared field let any healthy query's next
-  // progress event erase another query's Unhealthy (and a supervised
-  // restart wiped the failure before anyone observed it)
-  private val healthByQuery = new ConcurrentHashMap[String, Health]()
   private val byQuery = new ConcurrentHashMap[String, Long]()
+  // a QueryTerminatedEvent carries the query's id but not its name
+  private val nameById = new ConcurrentHashMap[UUID, String]()
+
+  /** The query's name, or its id when it has none (the name is null). */
+  private def dependency(id: UUID, name: String): String =
+    Option(name).getOrElse(id.toString)
 
   override def onQueryStarted(event: QueryStartedEvent): Unit = {
-    // putIfAbsent, not put: a checkpoint-based supervised restart reuses
-    // the same query id, and a prior Unhealthy must stay visible until the
-    // restarted query actually reports healthy progress — a plain put would
-    // wipe the failure on restart before anyone observed it
-    healthByQuery.putIfAbsent(event.id.toString, Unknown)
+    nameById.put(event.id, dependency(event.id, event.name))
     ()
   }
 
@@ -50,7 +48,7 @@ final class MetricsListener extends StreamingQueryListener {
     val p = event.progress
     processedTotal.addAndGet(p.numInputRows)
     // p.name is null for unnamed queries and CHM.merge NPEs on null keys
-    val key = Option(p.name).getOrElse(p.id.toString)
+    val key = dependency(p.id, p.name)
     byQuery.merge(key, p.numInputRows, (a, b) => a + b)
     lastEventsPerSecond = p.processedRowsPerSecond
     batches.incrementAndGet()
@@ -60,8 +58,7 @@ final class MetricsListener extends StreamingQueryListener {
     // backlog analog: rows available but not yet processed this trigger
     lastBacklog = math.max(0L,
       (p.inputRowsPerSecond - p.processedRowsPerSecond).toLong)
-    healthByQuery.put(p.id.toString,
-      if (batchMs > DegradedThresholdMs) Degraded else Healthy)
+    health.update(key, up = true, latencyMs = batchMs.toDouble)
     // one completed micro-batch = one span when tracing is on — the
     // reference's replicate_event unit lifted to Spark's batch
     // granularity (tracing.py:72-100; per-row spans at stream rates
@@ -79,14 +76,12 @@ final class MetricsListener extends StreamingQueryListener {
   }
 
   override def onQueryTerminated(event: QueryTerminatedEvent): Unit = {
+    val name = Option(nameById.remove(event.id))
+      .getOrElse(event.id.toString)
     if (event.exception.isDefined) {
       errorsTotal.incrementAndGet()
-      healthByQuery.put(event.id.toString, Unhealthy)
+      health.update(name, up = false, latencyMs = 0.0)
     }
-    // clean termination keeps the query's last observed health: erasing it
-    // would flip the aggregate back to Unknown the moment a healthy query
-    // stops, and a failure must stay visible until a NEW listener is
-    // installed for the recovered deployment
     ()
   }
 
@@ -110,18 +105,6 @@ final class MetricsListener extends StreamingQueryListener {
         name.endsWith("_count")) "counter" else "gauge"
       s"# TYPE $name $typ\n$name $v"
     }.mkString("", "\n", "\n")
-
-  /** Worst health across live queries (Unhealthy > Degraded > Unknown >
-    * Healthy); Unknown when no query has reported yet. */
-  def currentHealth: Health = {
-    import scala.jdk.CollectionConverters._
-    def sev(h: Health): Int = h match {
-      case Unhealthy => 3; case Degraded => 2; case Unknown => 1
-      case Healthy => 0
-    }
-    val hs = healthByQuery.values().asScala
-    if (hs.isEmpty) Unknown else hs.maxBy(sev)
-  }
 
   def processedFor(queryName: String): Long = byQuery.getOrDefault(queryName, 0L)
 }

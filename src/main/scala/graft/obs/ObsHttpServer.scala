@@ -10,7 +10,9 @@ import java.nio.charset.StandardCharsets
   * `src/observability/health.py:87-119` aiohttp `/health` route):
   *
   *   - `GET /health`  → [[HealthStatus.toJson]] (200 healthy/degraded,
-  *     503 unhealthy — load balancers key off the status code)
+  *     503 unhealthy — load balancers key off the status code). Give
+  *     `metrics` the same `health`, so a failed streaming query turns it
+  *     to 503 as a failed destination does
   *   - `GET /metrics` → [[MetricsListener.prometheusText]]
   *     (`text/plain; version=0.0.4` Prometheus exposition)
   *

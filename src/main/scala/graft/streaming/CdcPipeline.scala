@@ -18,9 +18,10 @@ import graft.sinks.DlqSink
   *     → foreachBatch { count; DLQ invalids ∥ fan out (upsert latest-state, …); commit }
   *
   * Inside a trigger the batch is persisted and counted (one job), then
-  * each write runs as one task per [[RowsPerWriteTask]] rows: a trigger
-  * of a few thousand events writes one file per destination, not one
-  * per core.
+  * every destination writes from that one cache. With two or more
+  * destinations each write runs as one task per [[RowsPerWriteTask]]
+  * rows: a trigger of a few thousand events writes one file per
+  * destination, not one per core.
   *
   * What replaces what (SURVEY §7.1):
   *  - `CommitLogReader.poll_for_new_events` (`src/cdc/reader.py:203-242`)
@@ -93,6 +94,8 @@ object CdcPipeline {
       onBatch: Seq[FanOut.FanOutResult] => Unit = _ => ()): StreamingQuery = {
 
     val store = stateStore(stateDir)
+    val dests = FanOut.Destination("state-store", retryPolicy, store.upsert) +:
+      extraSinks
 
     val masked = maskEnvelope(rules)(raw)
       .withColumn("event_key", ChangeEvent.eventKeyCol)
@@ -118,7 +121,7 @@ object CdcPipeline {
           // destination latencies (the health input) then time their own
           // writes, and Spark's state-store commit check sees every dedup
           // partition even when a replay skips every write. The two
-          // counts size the writes below (see RowsPerWriteTask)
+          // counts size the writes below (see writeTasks)
           val counts = batch.agg(count(lit(1)), count(ChangeEvent.invalidReason)).head()
           val invalidRows = counts.getLong(1)
           val validRows = counts.getLong(0) - invalidRows
@@ -128,13 +131,15 @@ object CdcPipeline {
           // is not idempotent); batch_id rides along so any residual
           // duplicate from a crash INSIDE the append window is
           // identifiable. The marker lives on the DLQ path's own
-          // filesystem, so a replay on another host sees it.
-          val deadLettered = FanOut.inheriting(spark.sparkContext) {
+          // filesystem, so a replay on another host sees it. It is one
+          // more write beside the destinations' when it sizes its tasks.
+          val deadLettered = FanOut.inheriting(spark.sparkContext,
+              Some(s"validation DLQ, batch $batchId")) {
             val vMarker = new Path(s"$dlqDir/_validation_batch_$batchId")
             val fs = vMarker.getFileSystem(spark.sparkContext.hadoopConfiguration)
             if (invalidRows > 0 && !fs.exists(vMarker)) {
               DlqSink.write(
-                invalid.coalesce(writeTasks(invalidRows))
+                sized(invalid, invalidRows, dests.size + 1)
                   .withColumnRenamed("_invalid_reason", "validation_reason")
                   .withColumn("batch_id", lit(batchId)),
                 dlqDir, destination = "state-store",
@@ -145,12 +150,10 @@ object CdcPipeline {
           }(ExecutionContext.global)
           // per-destination retry + failure isolation + DLQ handoff
           // (reference main.py:123-155 semantics; see FanOut), every
-          // destination and its handoff writing the coalesced frame
+          // destination and its handoff reading the persisted batch
           val results =
-            try FanOut.writeAll(valid.coalesce(writeTasks(validRows)), batchId,
-              FanOut.Destination("state-store", retryPolicy, store.upsert)
-                +: extraSinks,
-              dlqDir)
+            try FanOut.writeAll(sized(valid, validRows, dests.size), batchId,
+              dests, dlqDir)
             // the DLQ write reads the batch: never leave it running past
             // the unpersist below
             finally Await.ready(deadLettered, Duration.Inf)
@@ -167,23 +170,25 @@ object CdcPipeline {
     * trigger's fixed cost grows with its write tasks, and every later scan
     * of a delta, base or bucket opens every file. The batch arrives in
     * one partition per core (the dedup shuffle's), but the fan-out already
-    * runs its destinations side by side, so one task each keeps the cores
-    * busy. Measured on a 4-core host, three concurrent parquet writes of an
-    * envelope-shaped frame, one task each against four: 386 against
-    * 462 ms at 10,000 rows, 1,099 against 1,200 ms at 100,000, and 3,558
-    * against 3,041 ms at 400,000. A trigger of the reference's size
+    * runs two or more destinations side by side, so one task each keeps
+    * the cores busy. Measured on a 4-core host, three concurrent parquet
+    * writes of an envelope-shaped frame, one task each against four: 386
+    * against 462 ms at 10,000 rows, 1,099 against 1,200 ms at 100,000, and
+    * 3,558 against 3,041 ms at 400,000. A trigger of the reference's size
     * (`batch_size` ≤ 10,000, `settings.py:85`) therefore writes one file
-    * per destination, and a large file-source backlog keeps more tasks.
-    * A pipeline with the state store as its only destination gives up
-    * that write's parallelism: `ThroughputBench.run`'s 10,000-row triggers
-    * ran at 0.77× the parent's events per second. */
+    * per destination, and a large file-source backlog keeps more tasks. */
   private[graft] val RowsPerWriteTask = 100000L
 
-  /** Write tasks for a batch of `rows`: one per [[RowsPerWriteTask]] rows,
-    * at least one. The batch is `coalesce`d to this, which adds no shuffle
-    * and keeps a batch that already has fewer partitions as it is. */
-  private[graft] def writeTasks(rows: Long): Int =
-    math.max(1L, (rows + RowsPerWriteTask - 1) / RowsPerWriteTask).toInt
+  /** Tasks for one of `writes` side-by-side writes of `rows` rows: one
+    * per [[RowsPerWriteTask]] rows, at least one; `None` keeps the batch's
+    * partitions for a lone write, which one task would run on one core. */
+  private[graft] def writeTasks(rows: Long, writes: Int): Option[Int] =
+    if (writes < 2) None
+    else Some(math.max(1L, (rows + RowsPerWriteTask - 1) / RowsPerWriteTask).toInt)
+
+  /** `df` coalesced (no shuffle) to its [[writeTasks]]. */
+  private def sized(df: DataFrame, rows: Long, writes: Int): DataFrame =
+    writeTasks(rows, writes).fold(df)(df.coalesce)
 
   /** The pipeline's state store: one upsert identity and one
     * last-write-wins order shared by the writer and [[currentState]], so
@@ -208,8 +213,9 @@ object CdcPipeline {
     * `dlq.directory` → DLQ root; `masking_rules_file` → [[MaskRules]];
     * each enabled destination → a [[FanOut.Destination]] whose writer
     * `sinkFor` builds (JDBC/versioned/hypertable in production, parquet in
-    * the demo). Every fan-out result feeds `health` with up/down + the
-    * retried-write latency, driving HEALTHY/DEGRADED/UNHEALTHY. */
+    * the demo). Every fan-out result feeds `health` through
+    * [[graft.obs.HealthStatus.record]]; a [[graft.obs.MetricsListener]]
+    * built on the same `health` adds the streaming query itself. */
   def startFromConfig(
       spark: SparkSession,
       cfg: graft.config.PipelineConfig,
@@ -230,10 +236,6 @@ object CdcPipeline {
       maxFilesPerTrigger = cfg.pipeline.batchSize,
       extraSinks = dests,
       retryPolicy = policy,
-      onBatch = results => health.foreach { h =>
-        results.foreach(r => h.update(r.destination,
-          up = r.outcome.isInstanceOf[graft.sinks.Retry.Succeeded[_]],
-          latencyMs = r.durationMs.toDouble))
-      })
+      onBatch = results => health.foreach(_.record(results)))
   }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
+import java.util.concurrent.TimeoutException
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
@@ -17,8 +18,9 @@ import graft.sinks.{DlqSink, Retry, RetryPolicy}
   * `specs/.../research.md:361-378`).
   *
   * Spark shape (SURVEY §2.9 fan-out note): ONE streaming query, the batch
-  * `persist()`ed once, destination writes dispatched concurrently from the
-  * driver. Each destination owns a retry policy (§2.9 backoff semantics);
+  * `persist()`ed once by the caller, destination writes dispatched
+  * concurrently from the driver. Each destination owns a retry policy
+  * (§2.9 backoff semantics);
   * permanent or exhausted failures append the whole batch to that
   * destination's DLQ partition and the other destinations proceed —
   * matching the reference's per-sink health independence. Exactly-once
@@ -53,92 +55,76 @@ object FanOut {
 
   /** Outcome per destination for metrics/health bookkeeping;
     * `durationMs` covers the whole retried write (the sink-health latency
-    * input, `src/models/destination_sink.py:67-72`). */
+    * input, `src/models/destination_sink.py:67-72`), which
+    * [[graft.obs.HealthStatus.record]] reports. */
   final case class FanOutResult(destination: String,
       outcome: Retry.Outcome[Unit], dlqRows: Long, durationMs: Long = 0L)
 
-  /** Timer for destination write timeouts — one daemon thread, shared. */
-  private lazy val timeoutTimer = {
-    val t = new java.util.concurrent.ScheduledThreadPoolExecutor(1, (r: Runnable) => {
-      val th = new Thread(r, "fanout-timeout")
-      th.setDaemon(true)
-      th
-    })
-    t.setRemoveOnCancelPolicy(true)
-    t
-  }
-
-  /** `Future(f)` on `ec`, under the calling thread's Spark local
+  /** `Future(f)` on `ec`, under a copy of the calling thread's Spark local
     * properties. A pooled thread otherwise tags every job it runs with the
     * properties it inherited when the pool created it: in a streaming
     * query, batch 0's description, batch id and SQL root execution id, in
-    * every later trigger. */
-  def inheriting[A](sc: SparkContext)(f: => A)(
+    * every later trigger. A `label` names the jobs `f` runs: it becomes
+    * their call site (the stage name) and a line of their description, in
+    * the copy only. */
+  def inheriting[A](sc: SparkContext, label: Option[String] = None)(f: => A)(
       implicit ec: ExecutionContext): Future[A] = {
     val props = LocalProperties.capture(sc)
+    label.foreach(LocalProperties.labelled(props, _))
     Future(LocalProperties.withCopy(sc, props)(f))
   }
 
   /** Write `batch` to every destination concurrently; isolate failures.
-    * Returns per-destination outcomes (order of `dests`). Every write, and
-    * every DLQ handoff, runs under the caller's Spark local properties. */
+    * Returns per-destination outcomes (order of `dests`). Every destination
+    * and its DLQ handoff read `batch`, so a caller whose batch is costly to
+    * recompute persists it first. Each write and each DLQ handoff runs
+    * under the caller's Spark local properties, labelled with the
+    * destination and `batchId`. */
   def writeAll(batch: DataFrame, batchId: Long, dests: Seq[Destination],
       dlqDir: String)(implicit ec: ExecutionContext = ExecutionContext.global)
       : Seq[FanOutResult] = {
     val sc = batch.sparkSession.sparkContext
-    val props = LocalProperties.capture(sc)
-    batch.persist()
-    try {
-      val futures = dests.map { d =>
-        val t0 = System.currentTimeMillis()
-        // one `batch_write` span per destination per batch (the
-        // reference's tracing unit, `src/observability/tracing.py:103`);
-        // non-recording — two branches — unless Tracing.init was called.
-        // batch.size is not attributed here: counting the batch costs a
-        // Spark job, and the caller that knows the count can set it.
-        val span = graft.obs.Tracing.active
-          .map(_.startSpan("batch_write",
-            "destination" -> d.name, "batch.id" -> batchId))
-          .getOrElse(graft.obs.Span.NonRecording)
-        val attempt = Future(LocalProperties.withCopy(sc, props)(
-          Retry.withRetry(d.policy)(d.write(batch, batchId))))
-        // bound the whole retried write: a destination that HANGS (vs
-        // fails) must not stall the other destinations' next batch
-        val bounded: Future[Retry.Outcome[Unit]] =
-          if (d.timeoutMs == Long.MaxValue) attempt
-          else {
-            val p = scala.concurrent.Promise[Retry.Outcome[Unit]]()
-            val task = timeoutTimer.schedule(new Runnable {
-              def run(): Unit = {
-                p.trySuccess(Retry.Exhausted(
-                  new java.util.concurrent.TimeoutException(
-                    s"${d.name} write exceeded ${d.timeoutMs} ms"),
-                  attempts = 1, firstFailureAtMillis = t0))
-                ()
-              }
-            }, d.timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS)
-            attempt.onComplete { r => task.cancel(false); p.tryComplete(r) }
-            p.future
-          }
-        bounded.map { out =>
-          val dlqRows = LocalProperties.withCopy(sc, props)(out match {
-            case Retry.Succeeded(_, _) => 0L
-            case Retry.Permanent(err, attempts, firstAt) =>
-              span.recordError(err)
-              toDlq(batch, batchId, d.name, err, dlqDir, attempts, firstAt)
-            case Retry.Exhausted(err, attempts, firstAt) =>
-              span.recordError(err)
-              toDlq(batch, batchId, d.name, err, dlqDir, attempts, firstAt)
-          })
-          span.setAttribute("retry.attempts", out.attempts)
-            .setAttribute("dlq.rows", dlqRows)
-            .end()
-          FanOutResult(d.name, out, dlqRows,
-            durationMs = System.currentTimeMillis() - t0)
+    val futures = dests.map { d =>
+      val t0 = System.currentTimeMillis()
+      val label = Some(s"fan-out ${d.name}, batch $batchId")
+      // one `batch_write` span per destination per batch (the
+      // reference's tracing unit, `src/observability/tracing.py:103`);
+      // non-recording — two branches — unless Tracing.init was called.
+      // batch.size is not attributed here: counting the batch costs a
+      // Spark job, and the caller that knows the count can set it.
+      val span = graft.obs.Tracing.active
+        .map(_.startSpan("batch_write",
+          "destination" -> d.name, "batch.id" -> batchId))
+        .getOrElse(graft.obs.Span.NonRecording)
+      inheriting(sc, label) {
+        def attempt() = Retry.withRetry(d.policy)(d.write(batch, batchId))
+        // a destination that HANGS (vs fails) must not stall the other
+        // destinations' next batch: a bounded write runs on a thread of its
+        // own (under this thread's labelled properties) and is abandoned
+        // after its bound
+        val out =
+          if (d.timeoutMs == Long.MaxValue) attempt()
+          else try Await.result(inheriting(sc)(attempt()), Duration(d.timeoutMs, "ms"))
+          catch { case _: TimeoutException => Retry.Exhausted(
+            new TimeoutException(s"${d.name} write exceeded ${d.timeoutMs} ms"),
+            attempts = 1, firstFailureAtMillis = t0) }
+        val dlqRows = out match {
+          case Retry.Succeeded(_, _) => 0L
+          case Retry.Permanent(err, attempts, firstAt) =>
+            span.recordError(err)
+            toDlq(batch, batchId, d.name, err, dlqDir, attempts, firstAt)
+          case Retry.Exhausted(err, attempts, firstAt) =>
+            span.recordError(err)
+            toDlq(batch, batchId, d.name, err, dlqDir, attempts, firstAt)
         }
+        span.setAttribute("retry.attempts", out.attempts)
+          .setAttribute("dlq.rows", dlqRows)
+          .end()
+        FanOutResult(d.name, out, dlqRows,
+          durationMs = System.currentTimeMillis() - t0)
       }
-      Await.result(Future.sequence(futures), Duration.Inf)
-    } finally { batch.unpersist(); () }
+    }
+    Await.result(Future.sequence(futures), Duration.Inf)
   }
 
   private def toDlq(batch: DataFrame, batchId: Long, dest: String,

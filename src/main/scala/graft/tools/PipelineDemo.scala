@@ -34,9 +34,11 @@ object PipelineDemo {
     Files.createDirectories(java.nio.file.Paths.get(eventsDir))
     writeEvents(eventsDir)
 
-    val metrics = new MetricsListener
-    spark.streams.addListener(metrics)
+    // one health model: the listener reports the streaming query into it,
+    // the fan-out every destination
     val health = new HealthStatus()
+    val metrics = new MetricsListener(health)
+    spark.streams.addListener(metrics)
     // settings.py:118-119: tracing is config-gated; when enabled the
     // fan-out's per-destination batch_write spans print as console JSON
     val tracer = graft.obs.Tracing.initFromConfig(cfg.observability)
@@ -62,9 +64,9 @@ object PipelineDemo {
       println(s"[demo] destination ${d.name}: $n rows " +
         s"(${health.dependencyState(d.name)})")
     }
-    println(s"[demo] ${cfg.observability.metricsPath} →")
+    println(s"[demo] ${cfg.observability.metricsPath} ->")
     print(metrics.prometheusText)
-    println(s"[demo] ${cfg.observability.healthCheckPath} → ${health.toJson}")
+    println(s"[demo] ${cfg.observability.healthCheckPath} -> ${health.toJson}")
     graft.obs.Tracing.shutdown() // flush any buffered spans
     spark.streams.removeListener(metrics)
     spark.stop()

@@ -130,7 +130,45 @@ class FanOutSpec extends SparkSpec {
     assert(described("first").nonEmpty)
     val second = described("second")
     assert(second.size >= 5, second)
-    assert(second.forall(_.contains("second")), second)
+    // the caller's description, then the line naming the destination
+    assert(second.forall(_.exists(_.matches("second\nfan-out d[0-3], batch 1"))),
+      second)
+  }
+
+  test("fan-out jobs name their destination and batch as call site and " +
+      "description") {
+    import org.apache.spark.scheduler.SparkListenerJobStart
+    val tmp = Files.createTempDirectory("graft-labels")
+    val batch = Seq(("u1", "INSERT", 1L)).toDF("user_id", "event_type",
+      "timestamp_micros")
+    val sc = spark.sparkContext
+    // destination i runs one job of 10 + i tasks, so its job is known by
+    // its task count; d3 then fails, and its DLQ handoff runs more jobs
+    val dests = (0 until 4).map(i => FanOut.Destination(s"d$i",
+      RetryPolicy(maxAttempts = 1), (_: DataFrame, _: Long) => {
+        sc.parallelize(1 to 10 + i, 10 + i).count()
+        if (i == 3) throw new IllegalStateException("broken")
+      }))
+    val jobs = eventsOf(FanOut.writeAll(batch, 5L, dests, s"$tmp/dlq"))
+      .collect { case j: SparkListenerJobStart => j }
+    def callSite(j: SparkListenerJobStart) =
+      Option(j.properties).flatMap(p => Option(p.getProperty("callSite.short")))
+    def ownJob(i: Int) = jobs.filter(_.stageInfos.map(_.numTasks).max == 10 + i)
+    (0 until 4).foreach { i =>
+      val label = s"fan-out d$i, batch 5"
+      val Seq(own) = ownJob(i)
+      assert(callSite(own).contains(label))
+      assert(own.stageInfos.map(_.name) == Seq(label))
+      assert(own.properties.getProperty("spark.job.description") == label)
+    }
+    // the broken destination's DLQ handoff is named for it too
+    val handoff = jobs.filterNot(j => (0 until 4).exists(ownJob(_).contains(j)))
+    assert(handoff.nonEmpty)
+    assert(handoff.forall(callSite(_).contains("fan-out d3, batch 5")),
+      handoff.map(callSite))
+    // the labels lived in the fan-out's copies only
+    assert(sc.getLocalProperty("callSite.short") == null)
+    assert(sc.getLocalProperty("spark.job.description") == null)
   }
 
   test("a HUNG destination times out to its DLQ; the others are unaffected") {
@@ -202,9 +240,7 @@ class FanOutSpec extends SparkSpec {
       s"$tmp/state", s"$tmp/ckpt", s"$tmp/dlq",
       maxFilesPerTrigger = 1,
       extraSinks = dests,
-      onBatch = rs => rs.foreach(r => health.update(r.destination,
-        up = r.outcome.isInstanceOf[Retry.Succeeded[_]],
-        latencyMs = r.durationMs.toDouble)))
+      onBatch = health.record)
     try {
       q.processAllAvailable()
 
@@ -309,9 +345,7 @@ class FanOutSpec extends SparkSpec {
       s"$tmp/state", s"$tmp/ckpt", dlqDir,
       maxFilesPerTrigger = 1,
       extraSinks = dests,
-      onBatch = rs => rs.foreach(r => health.update(r.destination,
-        up = r.outcome.isInstanceOf[Retry.Succeeded[_]],
-        latencyMs = r.durationMs.toDouble)))
+      onBatch = health.record)
     try {
       // -- phase 1: both healthy --
       q.processAllAvailable()

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.obs.MetricsListener
+import graft.obs.{HealthStatus, MetricsListener}
 
 /** Listener-driven metrics with the reference's Prometheus names
   * (`src/observability/metrics.py:10-43`, `tests/unit/test_metrics.py`). */
@@ -9,7 +9,8 @@ class MetricsSpec extends SparkSpec {
   import spark.implicits._
 
   test("listener accumulates processed counts, durations, health") {
-    val listener = new MetricsListener
+    val health = new HealthStatus()
+    val listener = new MetricsListener(health)
     spark.streams.addListener(listener)
     try {
       implicit val sqlCtx = spark.sqlContext
@@ -32,24 +33,25 @@ class MetricsSpec extends SparkSpec {
       assert(snap("cdc_replication_duration_seconds_count") >= 2.0)
       assert(snap("cdc_errors_total") == 0.0)
       assert(listener.processedFor("metrics_probe") == 150L)
-      assert(listener.currentHealth != listener.Unknown)
+      assert(health.dependencyState("metrics_probe") != "UNKNOWN")
     } finally spark.streams.removeListener(listener)
   }
 
   test("supervised restart reusing the query id keeps prior Unhealthy visible") {
     import org.apache.spark.sql.streaming.StreamingQueryListener._
-    val listener = new MetricsListener
+    val health = new HealthStatus()
+    val listener = new MetricsListener(health)
     val id = java.util.UUID.randomUUID()
     listener.onQueryStarted(
       new QueryStartedEvent(id, java.util.UUID.randomUUID(), "q", "t0"))
     listener.onQueryTerminated(
       new QueryTerminatedEvent(id, java.util.UUID.randomUUID(), Some("boom")))
-    assert(listener.currentHealth == listener.Unhealthy)
+    assert(health.dependencyState("q") == "UNHEALTHY")
     // a checkpoint-based supervised restart reuses the SAME query id: the
     // failure must stay visible until the restart reports healthy progress
     listener.onQueryStarted(
       new QueryStartedEvent(id, java.util.UUID.randomUUID(), "q", "t1"))
-    assert(listener.currentHealth == listener.Unhealthy,
+    assert(health.dependencyState("q") == "UNHEALTHY",
       "restart wiped an unobserved failure")
   }
 
@@ -88,7 +90,6 @@ class MetricsSpec extends SparkSpec {
   }
 
   test("fan-out results drive health states incl. DEGRADED (health.py:21-84)") {
-    import graft.obs.HealthStatus
     import graft.sinks.RetryPolicy
     import graft.streaming.FanOut
     val health = new HealthStatus()
@@ -103,9 +104,7 @@ class MetricsSpec extends SparkSpec {
       FanOut.Destination("dead", RetryPolicy(maxAttempts = 1),
         (_, _) => throw new IllegalStateException("permanently broken"))),
       dir)
-    results.foreach(r => health.update(r.destination,
-      up = r.outcome.isInstanceOf[graft.sinks.Retry.Succeeded[_]],
-      latencyMs = r.durationMs.toDouble))
+    health.record(results)
 
     assert(health.dependencyState("fast") == "HEALTHY")
     assert(health.dependencyState("slow") == "DEGRADED")

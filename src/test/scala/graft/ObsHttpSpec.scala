@@ -36,6 +36,65 @@ class ObsHttpSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("a streaming query that fails turns /health to 503; its first " +
+      "progress after a restart brings it back") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    import spark.implicits._
+    val health = new HealthStatus()
+    val metrics = new MetricsListener(health)
+    val srv = new ObsHttpServer(health, metrics).start()
+    spark.streams.addListener(metrics)
+    // listener events arrive asynchronously: poll /health for the code
+    def healthCodeBecomes(code: Int): Boolean = {
+      val deadline = System.currentTimeMillis() + 10000
+      while (get(srv.port, "/health").statusCode() != code &&
+        System.currentTimeMillis() < deadline) Thread.sleep(50)
+      get(srv.port, "/health").statusCode() == code
+    }
+    try {
+      implicit val sqlCtx = spark.sqlContext
+      val input = MemoryStream[Int]
+      val ckpt = java.nio.file.Files.createTempDirectory("graft-health").toString
+      @volatile var sinkDown = false
+      def start() = input.toDF().writeStream
+        .queryName("health_probe")
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          if (sinkDown) throw new IllegalStateException("sink down")
+          b.count()
+          ()
+        }.start()
+      val q = start()
+      input.addData(1, 2)
+      q.processAllAvailable()
+      assert(healthCodeBecomes(200), get(srv.port, "/health").body())
+
+      sinkDown = true
+      input.addData(3)
+      intercept[StreamingQueryException](q.processAllAvailable())
+      assert(healthCodeBecomes(503), get(srv.port, "/health").body())
+      val body = get(srv.port, "/health").body()
+      assert(body.contains("\"health_probe\"") &&
+        body.contains("\"state\":\"UNHEALTHY\""), body)
+      assert(metrics.snapshot("cdc_errors_total") == 1.0)
+
+      // a restart from the checkpoint keeps the query's id and replays
+      // the failed batch; its progress reports the query up again
+      sinkDown = false
+      val restarted = start()
+      try {
+        assert(restarted.id == q.id)
+        restarted.processAllAvailable()
+        assert(healthCodeBecomes(200), get(srv.port, "/health").body())
+      } finally restarted.stop()
+    } finally {
+      spark.streams.removeListener(metrics)
+      srv.stop()
+    }
+  }
+
   test("serves Prometheus exposition with the reference metric names") {
     val metrics = new MetricsListener
     val srv = new ObsHttpServer(new HealthStatus, metrics).start()

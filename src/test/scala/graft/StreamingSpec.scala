@@ -193,9 +193,14 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("writeTasks: one write task per RowsPerWriteTask rows, at least one") {
+    // a write beside others is sized by its rows; a lone write keeps the
+    // batch's partitions
     val n = CdcPipeline.RowsPerWriteTask
-    assert(Seq(0L, 1L, n, n + 1, 2 * n + 1).map(CdcPipeline.writeTasks) ==
-      Seq(1, 1, 1, 2, 3))
+    val rows = Seq(0L, 1L, n, n + 1, 2 * n + 1)
+    Seq(2, 3, 4).foreach(writes =>
+      assert(rows.map(CdcPipeline.writeTasks(_, writes)) ==
+        Seq(1, 1, 1, 2, 3).map(Some(_)), writes))
+    assert(rows.map(CdcPipeline.writeTasks(_, 1)).forall(_.isEmpty))
   }
 
   private def kvBatch(rows: (String, String, Long)*) =
