@@ -16,6 +16,12 @@ import org.apache.spark.sql.SparkSession
   *
   * AQE is left at the Spark default (on). A caller passes in `conf` only
   * a setting that really differs from these.
+  *
+  * The `file:` filesystem is not bound here but in
+  * `src/main/resources/core-site.xml`, to [[graft.fs.NioLocalFileSystem]]
+  * and [[graft.fs.NioLocalFs]]: every Hadoop `Configuration` loads that
+  * file, so sessions built elsewhere (perfbench's) and `file:`
+  * filesystems cached before any session get it too.
   */
 object Session {
 

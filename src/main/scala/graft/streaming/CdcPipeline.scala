@@ -69,13 +69,16 @@ object CdcPipeline {
       extraSinks: Seq[FanOut.Destination] = Nil,
       retryPolicy: graft.sinks.RetryPolicy = graft.sinks.RetryPolicy(),
       onBatch: Seq[FanOut.FanOutResult] => Unit = _ => ()): StreamingQuery =
-    startFromRaw(spark,
-      spark.readStream
-        .schema(ChangeEvent.envelopeSchema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
-        .json(eventsDir),
+    startFromRaw(spark, jsonSource(spark, eventsDir, maxFilesPerTrigger),
       stateDir, checkpointDir, dlqDir, rules, triggerMs, extraSinks,
       retryPolicy, onBatch)
+
+  private def jsonSource(spark: SparkSession, eventsDir: String,
+      maxFilesPerTrigger: Int): DataFrame =
+    spark.readStream
+      .schema(ChangeEvent.envelopeSchema)
+      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      .json(eventsDir)
 
   /** The pipeline over ANY streaming envelope frame — the JSON file source
     * ([[start]]) and the framed-binary commitlog DSv2 source (the
@@ -91,7 +94,22 @@ object CdcPipeline {
       triggerMs: Long = 100,
       extraSinks: Seq[FanOut.Destination] = Nil,
       retryPolicy: graft.sinks.RetryPolicy = graft.sinks.RetryPolicy(),
-      onBatch: Seq[FanOut.FanOutResult] => Unit = _ => ()): StreamingQuery = {
+      onBatch: Seq[FanOut.FanOutResult] => Unit = _ => ()): StreamingQuery =
+    launch(spark, raw, stateDir, checkpointDir, dlqDir, rules, triggerMs,
+      extraSinks, retryPolicy, onBatch, name = None)
+
+  private def launch(
+      spark: SparkSession,
+      raw: DataFrame,
+      stateDir: String,
+      checkpointDir: String,
+      dlqDir: String,
+      rules: MaskRules,
+      triggerMs: Long,
+      extraSinks: Seq[FanOut.Destination],
+      retryPolicy: graft.sinks.RetryPolicy,
+      onBatch: Seq[FanOut.FanOutResult] => Unit,
+      name: Option[String]): StreamingQuery = {
 
     val store = stateStore(stateDir)
     val dests = FanOut.Destination("state-store", retryPolicy, store.upsert) +:
@@ -108,7 +126,8 @@ object CdcPipeline {
       .withWatermark("captured_at", "10 minutes")
       .dropDuplicatesWithinWatermark("event_key")
 
-    masked.writeStream
+    val writer = masked.writeStream
+    name.fold(writer)(writer.queryName)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -215,7 +234,8 @@ object CdcPipeline {
     * `sinkFor` builds (JDBC/versioned/hypertable in production, parquet in
     * the demo). Every fan-out result feeds `health` through
     * [[graft.obs.HealthStatus.record]]; a [[graft.obs.MetricsListener]]
-    * built on the same `health` adds the streaming query itself. */
+    * built on the same `health` adds the streaming query itself, under
+    * its [[queryName]]. */
   def startFromConfig(
       spark: SparkSession,
       cfg: graft.config.PipelineConfig,
@@ -229,13 +249,20 @@ object CdcPipeline {
       .map(f => MaskRules.fromYaml(f)).getOrElse(MaskRules())
     val dests = cfg.enabledDestinations.map(d =>
       FanOut.Destination(d.name, policy, sinkFor(d)))
-    start(spark, eventsDir, stateDir, checkpointDir,
+    launch(spark, jsonSource(spark, eventsDir, cfg.pipeline.batchSize),
+      stateDir, checkpointDir,
       dlqDir = cfg.dlqDirectory,
       rules = rules,
       triggerMs = cfg.pipeline.pollIntervalMs,
-      maxFilesPerTrigger = cfg.pipeline.batchSize,
       extraSinks = dests,
       retryPolicy = policy,
-      onBatch = results => health.foreach(_.record(results)))
+      onBatch = results => health.foreach(_.record(results)),
+      name = Some(queryName(cfg)))
   }
+
+  /** The streaming query's name under [[startFromConfig]], and so its
+    * `/health` dependency key: `cdc-<cassandra.keyspace>`, known from the
+    * config before the query starts and the same across restarts. */
+  def queryName(cfg: graft.config.PipelineConfig): String =
+    s"cdc-${cfg.source.keyspace}"
 }

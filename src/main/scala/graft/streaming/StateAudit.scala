@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.connector.read.streaming.Offset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{StreamingQuery, TTLConfig}
 
@@ -52,19 +53,19 @@ object StateAudit {
     }.getOrElse((-1L, -1L))
   }
 
-  /** Poll until the query has consumed `expected` cumulative input rows
-    * (MemoryStream rows, pre-flatMap) — `processAllAvailable` is
-    * unusable in ProcessingTime mode. */
-  private def awaitInputRows(q: StreamingQuery, expected: Long,
+  /** Poll until the query has processed its source up to `offset` (what
+    * the last `addData` returned) — `processAllAvailable` is unusable in
+    * ProcessingTime mode. Not by summing `recentProgress` input rows: it
+    * keeps the last 100 batches only, and timer housekeeping batches of
+    * a few ms each cycle through that between two polls. */
+  private def awaitOffset(q: StreamingQuery, offset: Offset,
       timeoutMs: Long = 120000): Unit = {
     val deadline = System.currentTimeMillis() + timeoutMs
-    var done = 0L
-    while (System.currentTimeMillis() < deadline && done < expected) {
-      done = q.recentProgress.map(_.numInputRows).sum
-      if (done < expected) Thread.sleep(200)
-    }
-    require(done >= expected,
-      s"stream consumed $done of $expected rows within ${timeoutMs}ms")
+    def reached = Option(q.lastProgress)
+      .exists(_.sources.exists(_.endOffset == offset.json))
+    while (System.currentTimeMillis() < deadline && !reached) Thread.sleep(200)
+    require(reached,
+      s"stream did not reach source offset ${offset.json} within ${timeoutMs}ms")
   }
 
   /** Wait for at least one more completed micro-batch (timer
@@ -98,8 +99,7 @@ object StateAudit {
     try {
       var rowsWave1 = -1L
       (0 until waves).foreach { w =>
-        input.addData(wave(w))
-        awaitInputRows(q, (w + 1).toLong * keysPerWave)
+        awaitOffset(q, input.addData(wave(w)))
         if (w == 0) rowsWave1 = stateRows(q)._1
         // let wave w expire before wave w+1 lands (and before the final
         // read): the TTL horizon passes, then one more batch gives the

@@ -95,6 +95,43 @@ class ObsHttpSpec extends SparkSpec {
     }
   }
 
+  test("a pipeline booted from config is a /health dependency under " +
+      "cdc-<keyspace>") {
+    import graft.config.{DestinationSettings, PipelineConfig, SourceSettings}
+    import graft.streaming.CdcPipeline
+    val base = java.nio.file.Files.createTempDirectory("graft-health-name")
+    val events = java.nio.file.Files.createDirectories(base.resolve("events"))
+    java.nio.file.Files.write(events.resolve("e.json"),
+      ("""{"event_id":"e1","event_type":"INSERT","table_name":"users",""" +
+        """"keyspace":"shop","partition_key":{"user_id":"u1"},""" +
+        """"clustering_key":{},"columns":{"age":"30"},""" +
+        """"timestamp_micros":1,"captured_at_micros":1}""").getBytes("UTF-8"))
+    val cfg = PipelineConfig(source = SourceSettings(keyspace = "shop"),
+      destinations = Seq(DestinationSettings("postgres", enabled = true)),
+      dlqDirectory = base.resolve("dlq").toString)
+    val health = new HealthStatus()
+    val metrics = new MetricsListener(health)
+    val srv = new ObsHttpServer(health, metrics).start()
+    spark.streams.addListener(metrics)
+    try {
+      val q = CdcPipeline.startFromConfig(spark, cfg, events.toString,
+        base.resolve("state").toString, base.resolve("ckpt").toString,
+        sinkFor = _ => (_, _) => (), health = Some(health))
+      try q.processAllAvailable() finally q.stop()
+      assert(q.name == "cdc-shop" && CdcPipeline.queryName(cfg) == "cdc-shop")
+      // the listener's progress event arrives asynchronously
+      val deadline = System.currentTimeMillis() + 10000
+      while (health.dependencyState("cdc-shop") == "UNKNOWN" &&
+        System.currentTimeMillis() < deadline) Thread.sleep(50)
+      val body = get(srv.port, "/health").body()
+      assert(body.contains("\"cdc-shop\":{\"status\":\"up\""), body)
+      assert(!body.contains(q.id.toString), body)
+    } finally {
+      spark.streams.removeListener(metrics)
+      srv.stop()
+    }
+  }
+
   test("serves Prometheus exposition with the reference metric names") {
     val metrics = new MetricsListener
     val srv = new ObsHttpServer(new HealthStatus, metrics).start()

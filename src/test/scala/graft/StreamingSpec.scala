@@ -192,6 +192,51 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("CDC triggers start no chmod, readlink, ls or stat process") {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    val base = Files.createTempDirectory("cdc-forks")
+    val events = Files.createDirectories(base.resolve("events"))
+    val extra = base.resolve("extra").toString
+    spark.range(1).count() // the session's own start-up is not under test
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val q = CdcPipeline.start(spark, events.toString,
+      base.resolve("state").toString, base.resolve("ckpt").toString,
+      base.resolve("dlq").toString,
+      extraSinks = Seq(FanOut.Destination("parquet",
+        write = (df, _) => df.write.mode("append").parquet(extra))))
+    try {
+      writeFile(events, "b1.json", Seq(eventJson("e1", "INSERT", "u1", "a@x.com", 1000)))
+      q.processAllAvailable()
+      writeFile(events, "b2.json", Seq(eventJson("e2", "UPDATE", "u1", "b@x.com", 2000),
+        """{"event_id":"bad","event_type":"INSERT","table_name":"users",
+          |"keyspace":"ecommerce","partition_key":{},"clustering_key":{},
+          |"columns":{},"timestamp_micros":5,"captured_at_micros":2000}"""
+          .stripMargin.replaceAll("\n", "")))
+      q.processAllAvailable()
+      writeFile(events, "b3.json", Seq(eventJson("e3", "DELETE", "u1", "", 3000)))
+      q.processAllAvailable()
+    } finally {
+      q.stop()
+      rec.stop()
+    }
+    assert(q.recentProgress.count(_.numInputRows > 0) == 3)
+    assert(graft.sinks.DlqSink.count(spark, base.resolve("dlq").toString,
+      "state-store") == 1)
+    val jfr = base.resolve("forks.jfr")
+    rec.dump(jfr)
+    rec.close()
+    // Spark's ArtifactManager cleaner runs `rm -rf` on its own thread, off
+    // the trigger path: it is not what this guards
+    val commands = RecordingFile.readAllEvents(jfr).asScala
+      .map(_.getString("command")).toSeq
+    val forked = commands.filter(c =>
+      Set("chmod", "readlink", "ls", "stat")(c.split(" ").head.split("/").last))
+    assert(forked.isEmpty, s"${forked.size} forks, e.g. ${forked.take(3)}")
+  }
+
   test("writeTasks: one write task per RowsPerWriteTask rows, at least one") {
     // a write beside others is sized by its rows; a lone write keeps the
     // batch's partitions
