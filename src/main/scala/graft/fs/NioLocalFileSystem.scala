@@ -2,7 +2,7 @@ package graft.fs
 
 import java.io.{File, FileNotFoundException, IOException}
 import java.net.URI
-import java.nio.file.{Files, NoSuchFileException}
+import java.nio.file.{Files, LinkOption, NoSuchFileException, StandardCopyOption}
 import java.nio.file.attribute.PosixFilePermission
 
 import scala.jdk.CollectionConverters._
@@ -96,7 +96,7 @@ class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
 class NioLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(new NioRawLocalFs(conf))
 
 /** Hadoop's `RawLocalFs` over [[NioRawLocalFileSystem]], with its four
-  * overrides. */
+  * overrides, and a rename that replaces a file in one step. */
 class NioRawLocalFs(conf: Configuration) extends DelegateToFileSystem(
     FsConstants.LOCAL_FS_URI, new NioRawLocalFileSystem, conf,
     FsConstants.LOCAL_FS_URI.getScheme, false) {
@@ -104,4 +104,19 @@ class NioRawLocalFs(conf: Configuration) extends DelegateToFileSystem(
   override def getServerDefaults: FsServerDefaults = LocalConfigKeys.getServerDefaults
   override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults
   override def isValidName(src: String): Boolean = true
+
+  /** A rename of a file over a file with OVERWRITE is one `rename(2)`, as
+    * HDFS's is one namenode operation. Hadoop's own deletes the target and
+    * then renames, so a reader in between finds no file: a pointer swapped
+    * through `CheckpointFileManager.createAtomic` would briefly vanish.
+    * Every other case is Hadoop's. */
+  override def renameInternal(src: Path, dst: Path, overwrite: Boolean): Unit = {
+    val raw = fsImpl.asInstanceOf[RawLocalFileSystem]
+    val (from, to) = (raw.pathToFile(src).toPath, raw.pathToFile(dst).toPath)
+    if (overwrite && from != to && Files.isRegularFile(from, LinkOption.NOFOLLOW_LINKS) &&
+        Files.isRegularFile(to, LinkOption.NOFOLLOW_LINKS))
+      Files.move(from, to, StandardCopyOption.ATOMIC_MOVE)
+    else super.renameInternal(src, dst, overwrite)
+    ()
+  }
 }

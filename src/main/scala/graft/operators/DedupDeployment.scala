@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.fs.CommitFiles
 
 /** Durable record of the embedding-LSH planes-per-band choice — the
   * dedup analog of the ANN index's GRID file
@@ -15,9 +16,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * sized.
   *
   * The artifact is a one-line `PLANES` file under the deployment root,
-  * written atomically (temp-write + overwrite-rename, the same
-  * `CURRENT`-pointer move as the index deployment — readers observe the
-  * old or the new value, never a torn write). [[nearDupPairs]] is the
+  * written atomically (the same [[graft.fs.CommitFiles]] swap as the
+  * index deployment's `CURRENT` pointer — readers observe the old or the
+  * new value, never a torn write). [[nearDupPairs]] is the
   * honoring entry point: recorded P if present, else the corpus-adaptive
   * ladder ([[Dedup.adaptiveEmbPlanes]]) — so the ORACLE-checked default
   * path (d05) is unchanged, and pinning is an explicit operator action
@@ -33,48 +34,25 @@ object DedupDeployment {
 
   private val PlanesFile = "PLANES"
 
-  private def fs(s: SparkSession, dir: String) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    (p.getFileSystem(s.sessionState.newHadoopConf()), p)
-  }
-
   /** Record the deployment's planes-per-band. Atomic reader-vs-writer:
     * a reader racing the write sees the previous record, never a torn
     * file. Writer-vs-writer safe too (ADVICE r15): each writer stages
-    * through its own uniquely-named temp file, so two concurrent
-    * recorders cannot interleave on a shared staging path — the last
-    * rename wins whole. */
+    * through its own uniquely-named temp file
+    * ([[graft.fs.CommitFiles]]'s swap), so two concurrent recorders cannot
+    * interleave on a shared staging path — the last rename wins whole. */
   def recordEmbPlanes(s: SparkSession, rootDir: String, planes: Int): Unit = {
     require(planes >= 1 && planes <= Dedup.EmbPlanesMax,
       s"planes $planes outside [1, ${Dedup.EmbPlanesMax}]")
-    val (f, root) = fs(s, rootDir)
-    f.mkdirs(root)
-    val tmp = new org.apache.hadoop.fs.Path(root,
-      s"$PlanesFile.tmp.${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, true)
-    try out.write(s"$planes\n".getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(root.toUri, s.sessionState.newHadoopConf())
-      .rename(tmp, new org.apache.hadoop.fs.Path(root, PlanesFile),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    val files = CommitFiles(s, rootDir)
+    files.mkdirs("")
+    files.swap(PlanesFile, s"$planes\n")
   }
 
   /** The recorded planes-per-band, or None when the deployment never
     * pinned one (→ the adaptive ladder applies). Read from disk on every
     * call — restart-safe by construction. */
-  def recordedEmbPlanes(s: SparkSession, rootDir: String): Option[Int] = {
-    val (f, root) = fs(s, rootDir)
-    val p = new org.apache.hadoop.fs.Path(root, PlanesFile)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        .trim.toInt)
-      finally in.close()
-    }
-  }
+  def recordedEmbPlanes(s: SparkSession, rootDir: String): Option[Int] =
+    CommitFiles(s, rootDir).read(PlanesFile).map(_.toInt)
 
   /** Size the knob with the d26 instrument (on a deterministic sampled
     * shard — the sweep's own discipline) and record the recommendation:

@@ -187,14 +187,12 @@ object Similarity {
     * Hadoop filesystem (the non-local-FS lesson). */
   private[graft] def ensureArtifacts(s: SparkSession, dir: String,
       tag: String, train: => DataFrame): String = {
-    val hc = s.sessionState.newHadoopConf()
     // cache key = fingerprint of the corpus dir's file METADATA (name,
     // length, mtime; one level of recursion for table subdirs) — a
     // regenerated corpus at the same path string invalidates the cache,
     // where a path-hash key would silently serve quantizers trained on
     // the old bytes. Driver-side listing only, no data scan.
-    val corpus = new org.apache.hadoop.fs.Path(dir)
-    val cfs = corpus.getFileSystem(hc)
+    val corpus = graft.fs.CommitFiles(s, dir)
     val md = java.security.MessageDigest.getInstance("SHA-256")
     // derivation-rule version rides the cache key: artifacts are a
     // function of (corpus bytes, quantizer rule), and a rule change —
@@ -206,20 +204,17 @@ object Similarity {
     def stamp(st: org.apache.hadoop.fs.FileStatus): Unit = md.update(
       s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}"
         .getBytes("UTF-8"))
-    if (cfs.exists(corpus))
-      cfs.listStatus(corpus).sortBy(_.getPath.getName).foreach { st =>
-        stamp(st)
-        if (st.isDirectory)
-          cfs.listStatus(st.getPath).sortBy(_.getPath.getName)
-            .foreach(stamp)
-      }
+    corpus.list("").sortBy(_.getPath.getName).foreach { st =>
+      stamp(st)
+      if (st.isDirectory)
+        corpus.list(st.getPath.getName).sortBy(_.getPath.getName).foreach(stamp)
+    }
     val fp = md.digest().take(8).map("%02x".format(_)).mkString
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft-artifacts/" +
-      s"$tag-$fp"
-    val rootP = new org.apache.hadoop.fs.Path(root)
-    val done = new org.apache.hadoop.fs.Path(s"$root/_DONE")
-    val fs = done.getFileSystem(hc)
-    if (!fs.exists(done)) {
+    val arts = graft.fs.CommitFiles(s,
+      s"${System.getProperty("java.io.tmpdir")}/graft-artifacts")
+    val name = s"$tag-$fp"
+    val root = arts.path(name).toString
+    if (!arts.exists(s"$name/_DONE")) {
       // a fresh fingerprint supersedes every older PUBLISHED artifact
       // set for this tag — retire them so corpus regeneration cannot
       // accumulate stale quantizer copies under the temp root forever.
@@ -229,13 +224,9 @@ object Similarity {
       // incomplete-dir rule); crashed tmps linger, bounded by crash
       // count. A concurrent reader of a retired root rebuilds on its
       // next call; this is a cache, not a store.
-      val parent = rootP.getParent
-      if (fs.exists(parent))
-        fs.listStatus(parent).map(_.getPath)
-          .filter(p => p.getName.startsWith(s"$tag-") &&
-            p.getName != rootP.getName &&
-            !p.getName.contains(".tmp-"))
-          .foreach(p => fs.delete(p, true))
+      arts.list("").map(_.getPath.getName)
+        .filter(n => n.startsWith(s"$tag-") && n != name && !n.contains(".tmp-"))
+        .foreach(arts.delete)
       // build aside, publish by atomic rename: a concurrent builder
       // computes identical artifacts (deterministic function of the
       // training frame), so whoever publishes first wins and the loser
@@ -243,17 +234,16 @@ object Similarity {
       // Hadoop rename into an EXISTING directory moves the source
       // UNDER it (returning true), so losing the race is detected by
       // re-checking the destination, not by the rename's return value.
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"$root.tmp-${java.util.UUID.randomUUID}")
+      val tmp = s"$name.tmp-${java.util.UUID.randomUUID}"
       val t = train
-      centsOf(t).write.mode("overwrite").parquet(s"$tmp/cents")
-      pqCodebook(t).write.mode("overwrite").parquet(s"$tmp/cb")
-      fs.create(new org.apache.hadoop.fs.Path(tmp, "_DONE"), true).close()
-      if (fs.exists(rootP) || !fs.rename(tmp, rootP)) fs.delete(tmp, true)
+      centsOf(t).write.mode("overwrite").parquet(s"${arts.path(tmp)}/cents")
+      pqCodebook(t).write.mode("overwrite").parquet(s"${arts.path(tmp)}/cb")
+      arts.mark(s"$tmp/_DONE")
+      val fs = arts.root.getFileSystem(s.sessionState.newHadoopConf())
+      if (arts.exists(name) || !fs.rename(arts.path(tmp), arts.path(name))) arts.delete(tmp)
       // raced between the exists check and the rename: the rename
       // nested tmp inside the winner's root — clean the stray copy
-      val nested = new org.apache.hadoop.fs.Path(rootP, tmp.getName)
-      if (fs.exists(nested)) fs.delete(nested, true)
+      arts.delete(s"$name/$tmp")
     }
     root
   }

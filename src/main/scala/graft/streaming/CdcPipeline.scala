@@ -3,11 +3,11 @@ package graft.streaming
 import scala.concurrent.{Await, ExecutionContext}
 import scala.concurrent.duration.Duration
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.events.ChangeEvent
+import graft.fs.CommitFiles
 import graft.functions.{HmacSha256, MaskRules}
 import graft.sinks.DlqSink
 
@@ -112,6 +112,7 @@ object CdcPipeline {
       name: Option[String]): StreamingQuery = {
 
     val store = stateStore(stateDir)
+    val dlqMarkers = CommitFiles(spark, dlqDir)
     val dests = FanOut.Destination("state-store", retryPolicy, store.upsert) +:
       extraSinks
 
@@ -154,9 +155,8 @@ object CdcPipeline {
           // more write beside the destinations' when it sizes its tasks.
           val deadLettered = FanOut.inheriting(spark.sparkContext,
               Some(s"validation DLQ, batch $batchId")) {
-            val vMarker = new Path(s"$dlqDir/_validation_batch_$batchId")
-            val fs = vMarker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            if (invalidRows > 0 && !fs.exists(vMarker)) {
+            val vMarker = s"_validation_batch_$batchId"
+            if (invalidRows > 0 && !dlqMarkers.exists(vMarker)) {
               DlqSink.write(
                 sized(invalid, invalidRows, dests.size + 1)
                   .withColumnRenamed("_invalid_reason", "validation_reason")
@@ -164,7 +164,7 @@ object CdcPipeline {
                 dlqDir, destination = "state-store",
                 errorType = "ValidationError", errorMessage = "validation failed",
                 failedAtMicros = System.currentTimeMillis() * 1000)
-              fs.createNewFile(vMarker)
+              dlqMarkers.mark(vMarker)
             }
           }(ExecutionContext.global)
           // per-destination retry + failure isolation + DLQ handoff

@@ -24,8 +24,12 @@ import graft.sinks.{DlqSink, Retry, RetryPolicy}
   * permanent or exhausted failures append the whole batch to that
   * destination's DLQ partition and the other destinations proceed —
   * matching the reference's per-sink health independence. Exactly-once
-  * stays per-destination: every sink write is `batchId`-idempotent, so a
-  * replayed batch re-writes only destinations that failed.
+  * holds per destination, and only for a destination whose write is
+  * `batchId`-idempotent: a batch replayed after a crash between its
+  * writes and the checkpoint commit runs every destination's write again
+  * under the same id. The state store and the versioned sink skip a
+  * batch they committed; `HypertableSink.write` appends without a batch
+  * id, so a replayed batch lands in it twice.
   *
   * Constraint: destinations run CONCURRENTLY and therefore must not share
   * an output path — two simultaneous parquet appends into one directory
@@ -35,9 +39,10 @@ import graft.sinks.{DlqSink, Retry, RetryPolicy}
 object FanOut {
 
   /** One destination: a name (DLQ partition key), a retry policy, a
-    * batchId-idempotent write, and a wall-clock bound on the whole
-    * retried write. `timeoutMs` guards against a destination that HANGS
-    * rather than fails (half-open TCP, a driver with no socket timeout):
+    * write (batchId-idempotent for exactly-once), and a wall-clock bound
+    * on the whole retried write. `timeoutMs` guards against a
+    * destination that HANGS rather than fails (half-open TCP, a driver
+    * with no socket timeout):
     * retries only isolate destinations that throw, and an unbounded
     * await on a hung one would stall every other destination's next
     * batch. On timeout the batch goes to this destination's DLQ and the

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.DoubleType
+import graft.fs.CommitFiles
 import graft.operators.Similarity
 
 /** Blue/green ANN index deployment — the executor of
@@ -16,10 +17,13 @@ import graft.operators.Similarity
   * pointer names the live generation. A rebuild retrains the quantizers
   * on the CURRENT corpus, builds the green index offline via the s20
   * shard path (frozen artifacts shipped to shard builders, merge = list
-  * concatenation), and then swaps the pointer ATOMICALLY (temp-write +
-  * overwrite-rename, as UpsertStateStore swaps `_LATEST`) — serving
-  * never sees a half-built index, and queries in flight finish on the
-  * generation their micro-batch started on.
+  * concatenation), and then swaps the pointer ATOMICALLY
+  * ([[graft.fs.CommitFiles]]'s swap, as UpsertStateStore swaps `_LATEST`)
+  * — serving never sees a half-built index, and queries in flight finish
+  * on the generation their micro-batch started on. Every swap stages
+  * through its own temp name, so a deploy and a rollback racing on
+  * `CURRENT` cannot interleave on a shared staging file: the last rename
+  * wins whole.
   *
   * Shape at 100 TB: the build runs beside serving (blue keeps
   * answering), shard encodes are embarrassingly parallel per-vector
@@ -29,98 +33,39 @@ import graft.operators.Similarity
 object IndexDeployment {
 
   private val Pointer = "CURRENT"
-
-  private def fs(s: SparkSession, dir: String) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    (p.getFileSystem(s.sessionState.newHadoopConf()), p)
-  }
-
-  /** The live generation, or None before the first deploy. */
-  def currentGen(s: SparkSession, rootDir: String): Option[Long] = {
-    val (f, root) = fs(s, rootDir)
-    val ptr = new org.apache.hadoop.fs.Path(root, Pointer)
-    if (!f.exists(ptr)) None
-    else {
-      val in = f.open(ptr)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        .trim.toLong)
-      finally in.close()
-    }
-  }
-
-  /** Atomic pointer flip: write `CURRENT.tmp`, rename over `CURRENT`
-    * with OVERWRITE — readers observe either the old or the new
-    * generation, never a partial write. */
-  private def flipPointer(s: SparkSession, rootDir: String,
-      gen: Long): Unit = {
-    val (f, root) = fs(s, rootDir)
-    f.mkdirs(root)
-    val tmp = new org.apache.hadoop.fs.Path(root, s"$Pointer.tmp")
-    val out = f.create(tmp, true)
-    try out.write(s"$gen\n".getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(root.toUri, s.sessionState.newHadoopConf())
-      .rename(tmp, new org.apache.hadoop.fs.Path(root, Pointer),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  private def genDir(rootDir: String, gen: Long) = s"$rootDir/gen=$gen"
-
   private val GridFile = "GRID"
   private val DoneFile = "_DONE"
 
-  /** Persist the generation's PQ grid beside its artifacts — the
-    * geometry is a property of the BUILD, so serving/measuring through
-    * the generation must read it back rather than assume the text
-    * default (a 16-dim image index deployed here would otherwise be
-    * sliced at the 8×8 text grid into empty subvectors). */
-  private def writeGrid(s: SparkSession, dir: String, m: Int,
-      subDim: Int, centroidStride: Int): Unit = {
-    val (f, d) = fs(s, dir)
-    f.mkdirs(d)
-    val out = f.create(new org.apache.hadoop.fs.Path(d, GridFile), true)
-    try out.write(s"$m $subDim $centroidStride\n".getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  private def genName(gen: Long) = s"gen=$gen"
+  private def genDir(rootDir: String, gen: Long) = s"$rootDir/${genName(gen)}"
+
+  /** The live generation, or None before the first deploy. */
+  def currentGen(s: SparkSession, rootDir: String): Option[Long] =
+    CommitFiles(s, rootDir).read(Pointer).map(_.toLong)
+
+  /** A generation's recorded `GRID` line, `m subDim [centroidStride]`:
+    * the geometry is a property of the BUILD, so serving/measuring
+    * through the generation must read it back rather than assume the
+    * text default (a 16-dim image index deployed here would otherwise be
+    * sliced at the 8×8 text grid into empty subvectors). None for a
+    * generation deployed before grids were recorded. */
+  private def grid(s: SparkSession, rootDir: String, gen: Long): Option[Array[Int]] =
+    CommitFiles(s, rootDir).read(s"${genName(gen)}/$GridFile")
+      .map(_.split(" ").map(_.toInt))
 
   /** A generation's PQ grid `(m, subDim)`; generations deployed before
     * grids were recorded default to the text grid they were built at. */
-  def gridOf(s: SparkSession, rootDir: String, gen: Long): (Int, Int) = {
-    val (f, _) = fs(s, rootDir)
-    val p = new org.apache.hadoop.fs.Path(
-      genDir(rootDir, gen), GridFile)
-    if (!f.exists(p)) (Similarity.PqM, Similarity.PqSubDim)
-    else {
-      val in = f.open(p)
-      val parts =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          .trim.split(" ")
-        finally in.close()
-      (parts(0).toInt, parts(1).toInt)
-    }
-  }
+  def gridOf(s: SparkSession, rootDir: String, gen: Long): (Int, Int) =
+    grid(s, rootDir, gen).fold((Similarity.PqM, Similarity.PqSubDim))(g => (g(0), g(1)))
 
   /** A generation's coarse-quantizer stride (the K ≈ N/stride knob a
     * 100 TB deploy sizes to keep assignment subquadratic — see
     * [[Similarity.CentroidStride]]'s scale note); generations recorded
     * before the stride rode the GRID file default to the fixture
     * constant they were built at. */
-  def strideOf(s: SparkSession, rootDir: String, gen: Long): Int = {
-    val (f, _) = fs(s, rootDir)
-    val p = new org.apache.hadoop.fs.Path(genDir(rootDir, gen), GridFile)
-    if (!f.exists(p)) Similarity.CentroidStride
-    else {
-      val in = f.open(p)
-      val parts =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          .trim.split(" ")
-        finally in.close()
-      if (parts.length >= 3) parts(2).toInt else Similarity.CentroidStride
-    }
-  }
+  def strideOf(s: SparkSession, rootDir: String, gen: Long): Int =
+    grid(s, rootDir, gen).collect { case g if g.length >= 3 => g(2) }
+      .getOrElse(Similarity.CentroidStride)
 
   /** Build one generation's full artifact set and PUBLISH it: quantizers
     * (centroids + codebook) trained on `train`, then the s20
@@ -156,6 +101,7 @@ object IndexDeployment {
     val gen = (currentGen(s, rootDir).toSeq ++ generations(s, rootDir))
       .reduceOption(_ max _).map(_ + 1).getOrElse(0L)
     val dir = genDir(rootDir, gen)
+    val files = CommitFiles(s, rootDir)
     // persist only what we persisted: a caller sharing one cached frame
     // across measure + rebuild (rebuildFromCdc) keeps its cache
     val owned = corpus.storageLevel ==
@@ -165,7 +111,8 @@ object IndexDeployment {
       val cents = Similarity.centsOf(train, stride).persist()
       val cb = Similarity.pqCodebook(train, m, subDim).persist()
       try {
-        writeGrid(s, dir, m, subDim, stride)
+        files.mkdirs(genName(gen))
+        files.swap(s"${genName(gen)}/$GridFile", s"$m $subDim $stride\n")
         cents.write.mode("overwrite").parquet(s"$dir/cents")
         cb.write.mode("overwrite").parquet(s"$dir/cb")
         e.write.mode("overwrite").parquet(s"$dir/corpus")
@@ -183,9 +130,8 @@ object IndexDeployment {
       // completion marker AFTER every table, BEFORE the flip: a crash
       // mid-deploy leaves a gen dir with tables missing — rollback must
       // be able to tell that apart from a complete generation
-      val (f, _) = fs(s, dir)
-      f.create(new org.apache.hadoop.fs.Path(dir, DoneFile), true).close()
-      flipPointer(s, rootDir, gen)
+      files.mark(s"${genName(gen)}/$DoneFile")
+      files.swap(Pointer, s"$gen\n")
       gen
     } finally { if (owned) e.unpersist(); () }
   }
@@ -345,21 +291,17 @@ object IndexDeployment {
     * written after the last table, so its presence is the
     * all-tables-present proof bare directory existence is not). */
   def rollback(s: SparkSession, rootDir: String, gen: Long): Unit = {
-    val (f, _) = fs(s, rootDir)
-    require(f.exists(new org.apache.hadoop.fs.Path(
-        genDir(rootDir, gen), DoneFile)),
+    val files = CommitFiles(s, rootDir)
+    require(files.exists(s"${genName(gen)}/$DoneFile"),
       s"generation $gen is absent or incomplete under $rootDir")
-    flipPointer(s, rootDir, gen)
+    files.swap(Pointer, s"$gen\n")
   }
 
   /** The on-disk generations, ascending. */
-  def generations(s: SparkSession, rootDir: String): Seq[Long] = {
-    val (f, root) = fs(s, rootDir)
-    if (!f.exists(root)) Seq.empty
-    else f.listStatus(root).toSeq.map(_.getPath.getName)
+  def generations(s: SparkSession, rootDir: String): Seq[Long] =
+    CommitFiles(s, rootDir).list("").map(_.getPath.getName)
       .filter(_.startsWith("gen=")).map(_.stripPrefix("gen=").toLong)
       .sorted
-  }
 
   /** Retention-prune old generations: the LIVE generation always
     * survives, plus the `keep` highest-numbered other COMPLETE ones —
@@ -378,12 +320,11 @@ object IndexDeployment {
       keep: Int = 1): Seq[Long] = {
     require(keep >= 0, s"keep must be non-negative, got $keep")
     val live = currentGen(s, rootDir)
-    val (f, root) = fs(s, rootDir)
+    val files = CommitFiles(s, rootDir)
     val complete = generations(s, rootDir).filter(g =>
-      f.exists(new org.apache.hadoop.fs.Path(genDir(rootDir, g), DoneFile)))
+      files.exists(s"${genName(g)}/$DoneFile"))
     val drop = complete.filterNot(live.contains).dropRight(keep)
-    drop.foreach(g =>
-      f.delete(new org.apache.hadoop.fs.Path(root, s"gen=$g"), true))
+    drop.foreach(g => files.delete(genName(g)))
     drop
   }
 

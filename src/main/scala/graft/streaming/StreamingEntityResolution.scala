@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
   StructField, StructType}
+import graft.fs.CommitFiles
 import graft.operators.{Dedup, ExtendedQueries}
 
 /** An arriving name record — the ER input shape (the reference's
@@ -96,29 +97,20 @@ object StreamingEntityResolution {
   private def keyBucket(c: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column = pmod(hash(c), lit(KeyBuckets))
 
-  private def dirExists(s: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(s.sessionState.newHadoopConf()).exists(p)
-  }
-
   /** The `batch_id` partition ids `< batchId` under `dir` — a
     * driver-side top-level directory listing (one FS call, no data
     * read). Drives the sidecar-activation guard AND the store-vs-sidecar
     * completeness comparison (a store batch with no sidecar counterpart
     * marks a crash that interrupted the pair of writes). */
   private def batchIdsBefore(s: SparkSession, dir: String,
-      batchId: Long): Set[Long] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).flatMap { st =>
+      batchId: Long): Set[Long] =
+    CommitFiles(s, dir).list("").flatMap { st =>
       val n = st.getPath.getName
       if (n.startsWith("batch_id="))
         scala.util.Try(n.stripPrefix("batch_id=").toLong)
           .toOption.filter(_ < batchId)
       else None
     }.toSet
-  }
 
   /** [[batchIdsBefore]] restricted to sidecar batch partitions whose
     * write job COMMITTED (`_SUCCESS` present). A crash mid-sidecar-write
@@ -131,11 +123,8 @@ object StreamingEntityResolution {
     * extra driver FS call per prior batch; no data read. */
   private def committedBatchIdsBefore(s: SparkSession, dir: String,
       batchId: Long): Set[Long] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    batchIdsBefore(s, dir, batchId).filter { m =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$dir/batch_id=$m/_SUCCESS"))
-    }
+    val files = CommitFiles(s, dir)
+    batchIdsBefore(s, dir, batchId).filter(m => files.exists(s"batch_id=$m/_SUCCESS"))
   }
 
   /** The resolved entity table as of batches `< beforeBatch` — latest
@@ -152,7 +141,7 @@ object StreamingEntityResolution {
     * present even on an empty or partition-less store. */
   private def storeRaw(s: SparkSession, storeDir: String): DataFrame = {
     val base =
-      if (dirExists(s, storeDir)) s.read.schema(RowSchema).parquet(storeDir)
+      if (CommitFiles.exists(s, storeDir)) s.read.schema(RowSchema).parquet(storeDir)
       else s.createDataFrame(s.sparkContext.emptyRDD[Row], RowSchema)
     if (base.columns.contains("batch_id")) base
     else base.withColumn("batch_id", lit(null))
@@ -169,7 +158,7 @@ object StreamingEntityResolution {
       beforeBatch: Long, buckets: Seq[Int]): DataFrame = {
     val dir = keysDir(storeDir)
     val base =
-      if (dirExists(s, dir)) s.read.schema(KeySchema).parquet(dir)
+      if (CommitFiles.exists(s, dir)) s.read.schema(KeySchema).parquet(dir)
       else s.createDataFrame(s.sparkContext.emptyRDD[Row], KeySchema)
     // empty partitions leave no files → no inferred partition columns
     val withB =
@@ -258,7 +247,7 @@ object StreamingEntityResolution {
     // the newcomers in the backfill — harmless for an existence probe,
     // their keys are already resolved.
     val sidecarActive =
-      if (!dirExists(s, keysDir(storeDir)))
+      if (!CommitFiles.exists(s, keysDir(storeDir)))
         batchIdsBefore(s, storeDir, batchId).isEmpty
       else {
         val missing = batchIdsBefore(s, storeDir, batchId) --

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType,
   StructField, StructType}
+import graft.fs.CommitFiles
 
 /** A change event on the vector corpus — the commit-log op convention
   * (I insert / U update / D delete, `ChangeEvent`'s op byte) aimed at
@@ -115,14 +116,6 @@ object StreamingIndexCdc {
       }
       .start()
 
-  /** Existence through the path's OWN filesystem — `java.io.File` would
-    * silently report `false` for every hdfs://
-    * URI and make [[readIndex]] resurrect deleted vectors at scale. */
-  private def dirExists(s: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(s.sessionState.newHadoopConf()).exists(p)
-  }
-
   private def emptyOf(s: SparkSession, schema: StructType): DataFrame =
     s.createDataFrame(s.sparkContext.emptyRDD[Row], schema)
 
@@ -130,7 +123,7 @@ object StreamingIndexCdc {
     * `batch_id=N` dirs with no part files (or no dir at all) read as an
     * empty frame, never a schema-inference error. */
   private def tombstones(s: SparkSession, tombDir: String): DataFrame =
-    if (dirExists(s, tombDir))
+    if (CommitFiles.exists(s, tombDir))
       s.read.schema(TombSchema).parquet(tombDir).select("vec_id", "seq")
     else emptyOf(s, TombSchema)
 
@@ -141,7 +134,7 @@ object StreamingIndexCdc {
     * readers an IntegerType `cid`. */
   private def encoded(s: SparkSession, indexDir: String): DataFrame = {
     val base =
-      if (dirExists(s, indexDir)) s.read.schema(EncSchema).parquet(indexDir)
+      if (CommitFiles.exists(s, indexDir)) s.read.schema(EncSchema).parquet(indexDir)
       else emptyOf(s, EncSchema)
     val withCid =
       if (base.columns.contains("cid")) base
@@ -193,7 +186,7 @@ object StreamingIndexCdc {
   def readSurvivors(s: SparkSession, corpusDir: String,
       tombDir: String, keepSeq: Boolean = false): DataFrame = {
     val raw =
-      if (dirExists(s, corpusDir))
+      if (CommitFiles.exists(s, corpusDir))
         s.read.schema(RawSchema).parquet(corpusDir)
           .select("vec_id", "seq", "embedding")
       else emptyOf(s, RawSchema)

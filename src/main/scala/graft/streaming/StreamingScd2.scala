@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
   StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
 import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType,
   StringType, StructField, StructType}
+import graft.fs.CommitFiles
 
 /** One change event aimed at the SCD2 maintainer — the q69 input shape
   * (`events` rows: the per-key change feed the commit log delivers in
@@ -201,11 +202,6 @@ object StreamingScd2 {
       }
       .start()
 
-  private def dirExists(s: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(s.sessionState.newHadoopConf()).exists(p)
-  }
-
   /** The materialized history — latest emission per (entity, version):
     * a closed row (non-null `valid_to_us`) supersedes its provisional
     * open form regardless of batch interleaving; a version only ever
@@ -214,7 +210,7 @@ object StreamingScd2 {
     * contract. */
   def readHistory(s: SparkSession, storeDir: String): DataFrame = {
     val base =
-      if (dirExists(s, storeDir)) s.read.schema(RowSchema).parquet(storeDir)
+      if (CommitFiles.exists(s, storeDir)) s.read.schema(RowSchema).parquet(storeDir)
       else s.createDataFrame(s.sparkContext.emptyRDD[Row], RowSchema)
     val withB =
       if (base.columns.contains("batch_id")) base

@@ -1,11 +1,9 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
+import graft.fs.CommitFiles
 import graft.ops.LatestState
 
 /** A last-write-wins table over parquet: a merged base plus per-batch
@@ -28,6 +26,10 @@ import graft.ops.LatestState
   *  - `_schema`: the base's schema, written by every merge, so reads and
   *    merges scan every directory at once without inferring it. Deltas
   *    are written under it; a batch that changes a column type merges.
+  *
+  * `tableDir` is any Hadoop path: the pointers, markers and listings go
+  * through [[graft.fs.CommitFiles]], so a plain path and its `file:` URI
+  * name the same table.
   *
   * A batch normally writes only its delta, with overwrite, and then its
   * marker: it reads no state. The MARKER is the delta's commit point; a
@@ -70,59 +72,49 @@ final class UpsertStateStore(
     isDeleteCol: String = "event_type",
     deleteValue: String = "DELETE") {
 
-  private val root = Paths.get(tableDir)
-  private val pointer = root.resolve("_LATEST")
-  private val schemaFile = root.resolve("_schema")
-  Files.createDirectories(root)
+  /** The table's files, on the Hadoop configuration of the session the
+    * store is first used with. */
+  private lazy val files = CommitFiles(SparkSession.active, tableDir)
+  private val Pointer = "_LATEST"
+  private val SchemaFile = "_schema"
 
   private val Base = "v(-?\\d+)".r
   private val Delta = "d(-?\\d+)".r
   private val Marker = "_committed_(-?\\d+)".r
 
-  private def readString(p: Path): String =
-    new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim
+  private def dir(name: String): String = files.path(name).toString
 
-  /** Entry names of a directory. Files.list streams hold a directory fd
-    * until closed; the store lists once per micro-batch on a long-lived
-    * driver, so leaking them to GC would exhaust fds. */
-  private def names(dir: Path): List[String] = {
-    val st = Files.list(dir)
-    try st.iterator().asScala.map(_.getFileName.toString).toList
-    finally st.close()
-  }
+  private def marker(batchId: Long): String = s"_committed_$batchId"
 
-  private def latestVersion: Option[String] =
-    if (Files.exists(pointer)) Some(readString(pointer)) else None
+  def committed(batchId: Long): Boolean = files.exists(marker(batchId))
 
-  private def marker(batchId: Long): Path = root.resolve(s"_committed_$batchId")
-
-  def committed(batchId: Long): Boolean = Files.exists(marker(batchId))
-
-  /** Committed deltas, oldest batch first. */
-  private def deltas: Seq[String] =
-    names(root).collect { case n @ Delta(id) if committed(id.toLong) => id.toLong -> n }
+  /** Committed deltas, oldest batch first, from one listing of the root:
+    * a delta's marker lies beside it. */
+  private def deltas: Seq[String] = {
+    val names = files.list("").map(_.getPath.getName).toSet
+    names.toSeq.collect { case n @ Delta(id) if names(marker(id.toLong)) => id.toLong -> n }
       .sorted.map(_._2)
+  }
 
   /** Parquet bytes of one version directory (no checksums or markers). */
   private def dataBytes(dir: String): Long =
-    names(root.resolve(dir)).filterNot(n => n.startsWith(".") || n.startsWith("_"))
-      .map(n => Files.size(root.resolve(dir).resolve(n))).sum
+    files.list(dir).filterNot { f =>
+      val n = f.getPath.getName
+      n.startsWith(".") || n.startsWith("_")
+    }.map(_.getLen).sum
 
   /** The schema of the current base, written by every merge. */
   private def storedSchema: Option[StructType] =
-    if (Files.exists(schemaFile))
-      Some(DataType.fromJson(readString(schemaFile)).asInstanceOf[StructType])
-    else None
+    files.read(SchemaFile).map(DataType.fromJson(_).asInstanceOf[StructType])
 
   /** The stored schema. A store written before `_schema` existed infers
     * it from its base (one Spark job) until its next upsert, which merges. */
   private def schema(spark: SparkSession, base: String): StructType =
-    storedSchema.getOrElse(spark.read.parquet(root.resolve(base).toString).schema)
+    storedSchema.getOrElse(spark.read.parquet(dir(base)).schema)
 
   /** Base + deltas, tombstones included, as ONE scan with a known schema. */
   private def stored(spark: SparkSession, base: String, deltas: Seq[String]): DataFrame =
-    spark.read.schema(schema(spark, base))
-      .parquet((base +: deltas).map(root.resolve(_).toString): _*)
+    spark.read.schema(schema(spark, base)).parquet((base +: deltas).map(dir): _*)
 
   private def winners(df: DataFrame): DataFrame =
     LatestState.latestPerKey(df, keyNames.map(col), orderNames.map(col))
@@ -132,7 +124,7 @@ final class UpsertStateStore(
     * round-tripping through the JSON DLQ and was replayed here) is LIVE —
     * a bare `=!=` would evaluate to null and silently drop it. */
   def current(spark: SparkSession): Option[DataFrame] =
-    latestVersion.map { base =>
+    files.read(Pointer).map { base =>
       val pending = deltas
       val rows = stored(spark, base, pending)
       // the base alone already holds one winner per key
@@ -155,26 +147,26 @@ final class UpsertStateStore(
   /** Fold every committed delta into a new base (ClickHouse's `OPTIMIZE
     * FINAL`), named after the newest folded batch; a no-op without
     * deltas. Tombstones stay in the base as in every merge. */
-  def compact(spark: SparkSession): Unit = (latestVersion, deltas.lastOption) match {
+  def compact(spark: SparkSession): Unit = (files.read(Pointer), deltas.lastOption) match {
     case (Some(base), Some(Delta(last))) => merge(spark, None, last.toLong, Some(base))
     case _ => ()
   }
 
   private def write(batch: DataFrame, batchId: Long, mergeDue: String => Boolean): Unit = {
     if (committed(batchId)) return
-    val base = latestVersion
+    val base = files.read(Pointer)
     if (base.contains(s"v$batchId")) {
       // crashed between a merge's pointer swap (its commit point) and the
       // marker: the merge already landed — backfill the marker, never
       // re-merge into the directory the current pointer reads from
-      Files.write(marker(batchId), Array.emptyByteArray)
+      files.mark(marker(batchId))
       return
     }
     (base, storedSchema) match {
       case (Some(b), Some(s)) if sameTypes(batch.schema, s) && !mergeDue(b) =>
         batch.select(s.fieldNames.toSeq.map(col): _*)
-          .write.mode("overwrite").parquet(root.resolve(s"d$batchId").toString)
-        Files.write(marker(batchId), Array.emptyByteArray)
+          .write.mode("overwrite").parquet(dir(s"d$batchId"))
+        files.mark(marker(batchId))
       case _ => merge(batch.sparkSession, Some(batch), batchId, base)
     }
   }
@@ -199,21 +191,11 @@ final class UpsertStateStore(
     // event older than the delete loses the next merge instead of
     // resurrecting the row
     val newVersion = s"v$batchId"
-    winners(unioned).write.mode("overwrite")
-      .parquet(root.resolve(newVersion).toString)
-    swap(schemaFile, unioned.schema.json, batchId)
-    swap(pointer, newVersion, batchId)
-    Files.write(marker(batchId), Array.emptyByteArray)
+    winners(unioned).write.mode("overwrite").parquet(dir(newVersion))
+    files.swap(SchemaFile, unioned.schema.json)
+    files.swap(Pointer, newVersion)
+    files.mark(marker(batchId))
     prune(Set(newVersion) ++ base, batchId)
-  }
-
-  /** Replace `target` atomically: readers see the old or the new content. */
-  private def swap(target: Path, content: String, batchId: Long): Unit = {
-    val tmp = root.resolve(s"${target.getFileName}.tmp$batchId")
-    Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    ()
   }
 
   /** After a merge at `batchId`: every delta is folded into the new base
@@ -221,20 +203,14 @@ final class UpsertStateStore(
     * every marker but this batch's, and every base but `keep` — the new
     * one and the previous one, which covers in-flight readers that
     * resolved the pointer just before the swap. */
-  private def prune(keep: Set[String], batchId: Long): Unit = {
-    def delRecursive(p: Path): Unit = {
-      if (Files.isDirectory(p)) names(p).foreach(n => delRecursive(p.resolve(n)))
-      Files.deleteIfExists(p)
-      ()
-    }
-    names(root).foreach { n =>
+  private def prune(keep: Set[String], batchId: Long): Unit =
+    files.list("").map(_.getPath.getName).foreach { n =>
       val drop = n match {
         case Base(_) => !keep(n)
         case Delta(_) => true
         case Marker(id) => id.toLong != batchId
         case _ => false
       }
-      if (drop) delRecursive(root.resolve(n))
+      if (drop) files.delete(n)
     }
-  }
 }

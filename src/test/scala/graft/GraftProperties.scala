@@ -214,7 +214,8 @@ object GraftProperties extends Properties("graft") {
           df.as[(String, String, Long, String)].collect().toSet
         val policies = Seq(Upsert, Append, AppendCompactAfter(compactAt % batches.size))
         policies.forall { policy =>
-          val dir = java.nio.file.Files.createTempDirectory("graft-prop").toString
+          // a file: URI names the same table as the plain path
+          val dir = java.nio.file.Files.createTempDirectory("graft-prop").toUri.toString
           // one (ts, id) order for every policy keeps the model deterministic
           val store = new graft.streaming.UpsertStateStore(dir, Seq("k"),
             Seq("ts", "id"), isDeleteCol = "typ", deleteValue = "D")

@@ -102,9 +102,10 @@ class StreamingSpec extends SparkSpec {
     val dlq = base.resolve("dlq")
     val dlqUri = dlq.toUri.toString
     assert(dlqUri.startsWith("file:"))
+    val stateUri = base.resolve("state").toUri.toString
     def runOnce(): Unit = {
       val q = CdcPipeline.start(spark, events.toString,
-        base.resolve("state").toString, base.resolve("ckpt").toString, dlqUri)
+        stateUri, base.resolve("ckpt").toString, dlqUri)
       q.processAllAvailable()
       q.stop()
     }
@@ -120,6 +121,16 @@ class StreamingSpec extends SparkSpec {
     runOnce()
     assert(Files.exists(commits.resolve("0")))
     assert(graft.sinks.DlqSink.count(spark, dlqUri, "state-store") == 1)
+
+    // the state store at a file: URI is the table under the plain path:
+    // its pointer and markers are not under a `file:` directory relative
+    // to the working directory, where java.nio would resolve the URI
+    val keys = CdcPipeline.currentState(spark, stateUri).get
+      .select("event_key_cols").as[String].collect()
+    assert(keys.length == 1 && keys.head.contains("u1"))
+    assert(CdcPipeline.currentState(spark, base.resolve("state").toString).get
+      .count() == 1)
+    assert(!Files.exists(Paths.get(stateUri)) && !Files.exists(Paths.get("file:")))
   }
 
   /** Data files under `dir`, recursively: no checksums, markers or
