@@ -22,6 +22,10 @@ final class CommitFiles(val root: Path, conf: Configuration) {
 
   def path(name: String): Path = if (name.isEmpty) root else new Path(root, name)
 
+  /** The root qualified by its filesystem: one string per table, however
+    * its path was written. */
+  lazy val id: String = root.getFileSystem(conf).makeQualified(root).toString
+
   /** A one-line file's content, trimmed; `None` when it does not exist. */
   def read(name: String): Option[String] =
     try {

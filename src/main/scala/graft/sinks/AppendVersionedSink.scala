@@ -1,7 +1,7 @@
 package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.lit
+import graft.functions.Bound
 import graft.streaming.UpsertStateStore
 
 /** The versioned destination — the engine's analog of the reference's
@@ -25,7 +25,7 @@ final class AppendVersionedSink(val tableDir: String, keyNames: Seq[String],
 
   /** Append a micro-batch, stamped with its `_batch_id`; safe to replay. */
   def append(batch: DataFrame, batchId: Long): Unit =
-    store.append(batch.withColumn("_batch_id", lit(batchId)), batchId)
+    store.append(batch.withColumn("_batch_id", Bound.long(batchId)), batchId)
 
   /** The exact read view: latest version per key, delete tombstones
     * dropped; empty before the first append. */

@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Bound
 
 /** Dead-letter queue as partitioned JSON-lines.
   *
@@ -41,15 +42,15 @@ object DlqSink {
     require(clash.isEmpty,
       s"DLQ payload columns ${clash.mkString(", ")} collide with DLQ meta " +
         "columns; rename them before dead-lettering")
-    df.withColumn("dlq_id", expr("uuid()"))
+    df.withColumn("dlq_id", Bound.uuid())
       .withColumn("destination", lit(destination))
       .withColumn("error_type", lit(errorType))
       .withColumn("error_message", lit(errorMessage))
       .withColumn("stack_trace", lit(stackTrace))
       .withColumn("retry_count", lit(retryCount))
       .withColumn("first_failure_at_micros",
-        lit(if (firstFailureAtMicros > 0) firstFailureAtMicros else failedAtMicros))
-      .withColumn("failed_at_micros", lit(failedAtMicros))
+        Bound.long(if (firstFailureAtMicros > 0) firstFailureAtMicros else failedAtMicros))
+      .withColumn("failed_at_micros", Bound.long(failedAtMicros))
       .withColumn("failed_date",
         date_format(timestamp_micros(lit(failedAtMicros)), "yyyy-MM-dd"))
       .write.mode("append")

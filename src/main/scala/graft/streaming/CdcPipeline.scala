@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.events.ChangeEvent
 import graft.fs.CommitFiles
-import graft.functions.{HmacSha256, MaskRules}
+import graft.functions.{Bound, HmacSha256, MaskRules}
 import graft.sinks.DlqSink
 
 /** The reference's critical path (SURVEY §3.1–3.2) as one Structured
@@ -21,7 +21,14 @@ import graft.sinks.DlqSink
   * every destination writes from that one cache. With two or more
   * destinations each write runs as one task per [[RowsPerWriteTask]]
   * rows: a trigger of a few thousand events writes one file per
-  * destination, not one per core.
+  * destination, not one per core. The state store's write is O(batch):
+  * the trigger writes the batch as a delta plus its commit marker, and
+  * the O(state) fold of the deltas into a new base runs after the
+  * trigger, on a thread of its own, once the deltas reach the base's
+  * size ([[UpsertStateStore]]). Per-batch values (the batch id, DLQ
+  * timestamps) reach generated code by reference
+  * ([[graft.functions.Bound]]), so a trigger compiles no new classes
+  * for them.
   *
   * What replaces what (SURVEY §7.1):
   *  - `CommitLogReader.poll_for_new_events` (`src/cdc/reader.py:203-242`)
@@ -32,7 +39,7 @@ import graft.sinks.DlqSink
   *  - `OffsetManager` (`src/cdc/offset.py`) → the checkpoint/WAL;
   *  - per-row `ON CONFLICT` loops → set-based [[UpsertStateStore.upsert]];
   *  - transactional data+offset commit (`src/sinks/postgres.py:148-205`)
-  *    → idempotent batchId-guarded merge + checkpoint sequencing.
+  *    → idempotent batchId-guarded delta marker + checkpoint sequencing.
   *
   * Masking and validation are Column expressions inside the streaming plan
   * (not driver loops), so Catalyst optimizes and codegens them per batch.
@@ -157,13 +164,7 @@ object CdcPipeline {
               Some(s"validation DLQ, batch $batchId")) {
             val vMarker = s"_validation_batch_$batchId"
             if (invalidRows > 0 && !dlqMarkers.exists(vMarker)) {
-              DlqSink.write(
-                sized(invalid, invalidRows, dests.size + 1)
-                  .withColumnRenamed("_invalid_reason", "validation_reason")
-                  .withColumn("batch_id", lit(batchId)),
-                dlqDir, destination = "state-store",
-                errorType = "ValidationError", errorMessage = "validation failed",
-                failedAtMicros = System.currentTimeMillis() * 1000)
+              deadLetterInvalid(sized(invalid, invalidRows, dests.size + 1), batchId, dlqDir)
               dlqMarkers.mark(vMarker)
             }
           }(ExecutionContext.global)
@@ -183,6 +184,18 @@ object CdcPipeline {
       }
       .start()
   }
+
+  /** Append a batch's invalid rows to the validation DLQ, tagged with the
+    * batch id. Every per-batch value reaches generated code by reference
+    * ([[graft.functions.Bound]]), so one compile serves every trigger. */
+  private[graft] def deadLetterInvalid(invalid: DataFrame, batchId: Long,
+      dlqDir: String): Unit =
+    DlqSink.write(
+      invalid.withColumnRenamed("_invalid_reason", "validation_reason")
+        .withColumn("batch_id", Bound.long(batchId)),
+      dlqDir, destination = "state-store",
+      errorType = "ValidationError", errorMessage = "validation failed",
+      failedAtMicros = System.currentTimeMillis() * 1000)
 
   /** Rows one write task takes. Every task of a destination's write
     * writes its own file and is committed and renamed on its own, so a
@@ -211,7 +224,7 @@ object CdcPipeline {
 
   /** The pipeline's state store: one upsert identity and one
     * last-write-wins order shared by the writer and [[currentState]], so
-    * the read ranks base and delta rows exactly as a merge would. */
+    * the read ranks base and delta rows exactly as a fold does. */
   def stateStore(stateDir: String): UpsertStateStore =
     new UpsertStateStore(stateDir,
       keyNames = Seq("keyspace", "table_name", "event_key_cols"),

@@ -6,8 +6,8 @@ import java.util.concurrent.TimeoutException
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.LocalProperties
+import graft.functions.Bound
 import graft.sinks.{DlqSink, Retry, RetryPolicy}
 
 /** Per-batch fan-out to N destinations with per-destination failure
@@ -139,7 +139,7 @@ object FanOut {
     val sw = new java.io.StringWriter()
     err.printStackTrace(new java.io.PrintWriter(sw))
     DlqSink.write(
-      batch.withColumn("batch_id", lit(batchId)),
+      batch.withColumn("batch_id", Bound.long(batchId)),
       dlqDir, destination = dest,
       errorType = err.getClass.getSimpleName,
       errorMessage = Option(err.getMessage).getOrElse(""),

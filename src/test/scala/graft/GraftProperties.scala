@@ -208,10 +208,13 @@ object GraftProperties extends Properties("graft") {
       cases.forall { case ((evs, cuts), compactAt) =>
         val bounds = (0 +: cuts :+ evs.length).distinct
         val batches = bounds.zip(bounds.tail)
-        val model = graft.ops.LatestState.materialize(evs.toDF(cols: _*),
-          Seq(col("k")), Seq(col("ts"), col("id")), col("typ") === "D")
         def rows(df: org.apache.spark.sql.DataFrame) =
           df.as[(String, String, Long, String)].collect().toSet
+        // the model after each batch: LatestState over the events so far
+        val models = batches.map { case (_, b) =>
+          rows(graft.ops.LatestState.materialize(evs.take(b).toDF(cols: _*),
+            Seq(col("k")), Seq(col("ts"), col("id")), col("typ") === "D"))
+        }
         val policies = Seq(Upsert, Append, AppendCompactAfter(compactAt % batches.size))
         policies.forall { policy =>
           // a file: URI names the same table as the plain path
@@ -219,7 +222,7 @@ object GraftProperties extends Properties("graft") {
           // one (ts, id) order for every policy keeps the model deterministic
           val store = new graft.streaming.UpsertStateStore(dir, Seq("k"),
             Seq("ts", "id"), isDeleteCol = "typ", deleteValue = "D")
-          batches.zipWithIndex.foreach { case ((a, b), batchId) =>
+          val everyBatch = batches.zipWithIndex.forall { case ((a, b), batchId) =>
             val batch = evs.slice(a, b).toDF(cols: _*)
             policy match {
               case Upsert => store.upsert(batch, batchId.toLong)
@@ -228,8 +231,13 @@ object GraftProperties extends Properties("graft") {
                 store.append(batch, batchId.toLong)
                 if (batchId == at) store.compact(spark)
             }
+            // read while the fold this batch started may still be running
+            rows(store.current(spark).get) == models(batchId)
           }
-          rows(store.current(spark).get) == rows(model)
+          everyBatch && {
+            graft.streaming.UpsertStateStore.awaitFolds()
+            rows(store.current(spark).get) == models.last
+          }
         }
       }
     })

@@ -133,6 +133,11 @@ class StreamingSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(stateUri)) && !Files.exists(Paths.get("file:")))
   }
 
+  /** A job of a state-store fold, which runs after a trigger, not in it. */
+  private def isFold(p: java.util.Properties): Boolean =
+    Option(p).flatMap(p => Option(p.getProperty("spark.job.description")))
+      .exists(_.startsWith("state-store fold"))
+
   /** Data files under `dir`, recursively: no checksums, markers or
     * `_SUCCESS`. */
   private def dataFiles(dir: Path): Set[Path] =
@@ -174,10 +179,13 @@ class StreamingSpec extends SparkSpec {
             |"columns":{},"timestamp_micros":5,"captured_at_micros":2000}"""
             .stripMargin.replaceAll("\n", ""))
       val seen = eventsOf(q.processAllAvailable())
+      UpsertStateStore.awaitFolds()
       val added = dests.zip(before).map { case (d, b) =>
         (dataFiles(d) -- b).toSeq.map(f => d.relativize(f).getParent.toString)
       }
-      val Seq(state, versionedDelta, bucket, dlq) = added
+      // a fold's base is written beside the triggers, not by one
+      val Seq(stateAndFold, versionedDelta, bucket, dlq) = added
+      val state = stateAndFold.filterNot(_.matches("v\\d+"))
       assert(state.size == 1 && state.head.matches("d\\d+"), state)
       assert(versionedDelta.size == 1 && versionedDelta.head.matches("d\\d+"),
         versionedDelta)
@@ -192,7 +200,7 @@ class StreamingSpec extends SparkSpec {
         s.executionId.toString -> s.physicalPlanDescription
       }.toMap
       def writeTaskCounts(dest: Path): Seq[Int] = seen.collect {
-        case j: SparkListenerJobStart if Option(j.properties)
+        case j: SparkListenerJobStart if !isFold(j.properties) && Option(j.properties)
             .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
             .flatMap(plans.get)
             .exists(p => p.contains("InsertIntoHadoopFsRelationCommand") &&
@@ -316,9 +324,11 @@ class StreamingSpec extends SparkSpec {
   test("upsert store: replay after a crash between pointer swap and marker") {
     val dir = Files.createTempDirectory("graft-crash")
     val store = new UpsertStateStore(dir.toString, Seq("k"), Seq("ts"))
-    store.upsert(kvBatch(("k1", "INSERT", 100L)), 1)
-    // a delta far larger than the one-row base: the next batch merges
-    store.upsert(filler(500, 100L), 2)
+    def narrow(df: org.apache.spark.sql.DataFrame) = df.withColumn("ts", $"ts".cast("int"))
+    store.upsert(narrow(kvBatch(("k1", "INSERT", 100L))), 1)
+    store.upsert(narrow(filler(500, 100L)), 2)
+    // a batch that widens ts merges inline, and only an inline merge swaps
+    // the pointer before its marker
     store.upsert(kvBatch(("k1", "UPDATE", 200L)), 3)
     assert(pointerOf(dir) == "v3")
     val state = store.current(spark).get.collect().toSet
@@ -329,6 +339,7 @@ class StreamingSpec extends SparkSpec {
     assert(Files.exists(dir.resolve("_committed_3")), "marker backfilled")
   }
 
+  // a fold is the store's merge; pruning runs one fold behind
   test("upsert store: a merge prunes bases before the previous one and deltas below it") {
     val dir = Files.createTempDirectory("graft-prune")
     val store = new UpsertStateStore(dir.toString, Seq("k"), Seq("ts"))
@@ -336,16 +347,20 @@ class StreamingSpec extends SparkSpec {
     (1L to 12L).foreach { b =>
       val batch = kvBatch(("k1", "INSERT", b * 100))
       store.upsert(if (b % 3 == 2) batch.unionByName(filler(2000, b)) else batch, b)
+      UpsertStateStore.awaitFolds()
       if (pointerOf(dir) == s"v$b") {
         bases :+= s"v$b"
         val names = entries(dir)
         assert(names.filter(_.matches("v\\d+")) subsetOf bases.takeRight(2).toSet,
-          s"after the merge at $b: $names")
-        assert(!names.exists(n => n.matches("d\\d+") && n.tail.toLong <= b),
-          s"after the merge at $b: $names")
+          s"after the fold through $b: $names")
+        // the previous base's batches are gone; this fold's stay readable
+        val previous = bases.takeRight(2).head.tail.toLong
+        val deltas = names.filter(_.matches("d\\d+")).map(_.tail.toLong)
+        assert(deltas.filter(_ <= b) == (previous + 1 to b).toSet,
+          s"after the fold through $b: $names")
       }
     }
-    assert(bases.size >= 3, s"merges: $bases")
+    assert(bases.size >= 3, s"folds: $bases")
     assert(store.current(spark).get.filter($"k" === "k1")
       .select("ts").as[Long].head() == 1200L)
   }
@@ -362,7 +377,7 @@ class StreamingSpec extends SparkSpec {
     }
     val before = baseFiles()
     val jobs = jobPropertiesOf(store.upsert(
-      kvBatch(("f1", "UPDATE", 200L), ("new", "INSERT", 200L)), 2))
+      kvBatch(("f1", "UPDATE", 200L), ("new", "INSERT", 200L)), 2)).filterNot(isFold)
     // the write is the only job: no state read, no schema inference
     assert(jobs.size == 1, s"${jobs.size} jobs")
     assert(pointerOf(dir) == pointer && baseFiles() == before)
@@ -373,25 +388,29 @@ class StreamingSpec extends SparkSpec {
     assert(cur.filter($"k" === "f1").select("ts").as[Long].head() == 200L)
   }
 
+  // the trigger writes d<b>; the fold it starts lays down v<b>
   test("upsert store: a batch merges exactly when the committed deltas' " +
       "bytes reach the base's") {
     val dir = Files.createTempDirectory("graft-threshold")
     val store = new UpsertStateStore(dir.toString, Seq("k"), Seq("ts"))
     store.upsert(filler(300, 100L), 1)
-    var merges = 0
+    var folds = 0
     var deltas = 0
     (2L to 14L).foreach { b =>
-      val names = entries(dir)
-      val pending = names.filter(n => n.matches("d\\d+") &&
-        names(s"_committed_${n.tail}")).toSeq.map(n => dataBytes(dir.resolve(n))).sum
-      val merge = pending >= dataBytes(dir.resolve(pointerOf(dir)))
+      val base = pointerOf(dir)
       store.upsert(filler(40, b).withColumn("k",
         concat($"k", lit(s"-$b"))), b)
-      assert(Files.exists(dir.resolve(s"v$b")) == merge, s"batch $b")
-      assert(Files.exists(dir.resolve(s"d$b")) == !merge, s"batch $b")
-      if (merge) merges += 1 else deltas += 1
+      assert(Files.exists(dir.resolve(s"d$b")), s"batch $b")
+      UpsertStateStore.awaitFolds()
+      // pruning runs one fold behind: every delta above the old base is
+      // still there, and so is the old base
+      val pending = (base.tail.toLong + 1 to b).map(i => dataBytes(dir.resolve(s"d$i"))).sum
+      val fold = pending >= dataBytes(dir.resolve(base))
+      assert(Files.exists(dir.resolve(s"v$b")) == fold, s"batch $b")
+      assert(pointerOf(dir) == (if (fold) s"v$b" else base), s"batch $b")
+      if (fold) folds += 1 else deltas += 1
     }
-    assert(merges > 0 && deltas > 0, s"$merges merges, $deltas deltas")
+    assert(folds > 0 && deltas > 0, s"$folds folds, $deltas deltas")
     assert(store.current(spark).get.count() == 300 + 13 * 40)
   }
 
@@ -405,12 +424,13 @@ class StreamingSpec extends SparkSpec {
     store.upsert(kvBatch(("k1", "UPDATE", 200L)), 3) // late, in a later delta
     assert(Files.exists(dir.resolve("d2")) && Files.exists(dir.resolve("d3")))
     assert(!keys()("k1"), "the delta's tombstone must outrank the late event")
-    store.upsert(filler(4000, 500L), 4) // a delta as large as the base
-    store.upsert(kvBatch(("k1", "UPDATE", 250L)), 5) // late; merges
-    assert(pointerOf(dir) == "v5" && !entries(dir).exists(_.startsWith("d")))
-    assert(!keys()("k1"), "the merged tombstone must outrank the late event")
-    // the tombstone is retained in the base, not dropped by the merge
-    assert(spark.read.parquet(dir.resolve("v5").toString)
+    store.upsert(filler(4000, 500L), 4) // a delta as large as the base: a fold
+    UpsertStateStore.awaitFolds()
+    store.upsert(kvBatch(("k1", "UPDATE", 250L)), 5) // late, above the fold
+    assert(pointerOf(dir) == "v4" && Files.exists(dir.resolve("d5")))
+    assert(!keys()("k1"), "the folded tombstone must outrank the late event")
+    // the tombstone is retained in the base, not dropped by the fold
+    assert(spark.read.parquet(dir.resolve("v4").toString)
       .filter($"k" === "k1").select("event_type").as[String].collect()
       .toSeq == Seq("DELETE"))
     store.upsert(kvBatch(("k1", "INSERT", 400L)), 6) // a newer write revives
@@ -437,6 +457,132 @@ class StreamingSpec extends SparkSpec {
     assert(after.filter($"k" === "f1").select("ts").as[Long].collect()
       .toSeq == Seq(200L))
     assert(store.committed(2) && !Files.exists(dir.resolve("v2")))
+  }
+
+  /** Copy `from` to `to`, directories and files alike. */
+  private def copyTree(from: Path, to: Path): Unit = {
+    val st = Files.walk(from)
+    try st.iterator.asScala.foreach(p => Files.copy(p, to.resolve(from.relativize(p).toString)))
+    finally st.close()
+  }
+
+  private def rowsOf(store: UpsertStateStore) =
+    store.current(spark).get.as[(String, String, Long)].collect().toSet
+
+  test("upsert store: a fold that crashed after writing its base, before " +
+      "the swap, leaves the old base current and is redone by the next fold") {
+    val dir = Files.createTempDirectory("graft-fold-unswapped")
+    val store = new UpsertStateStore(dir.toString, Seq("k"), Seq("ts"))
+    store.upsert(filler(2000, 100L), 1)
+    store.upsert(kvBatch(("k1", "INSERT", 200L)), 2)
+    store.upsert(filler(4000, 300L), 3) // the deltas reach the base: a fold
+    UpsertStateStore.awaitFolds()
+    assert(pointerOf(dir) == "v3")
+    val folded = rowsOf(store)
+    // the crash: v3 is written, the pointer still names the base it read
+    graft.fs.CommitFiles(spark, dir.toString).swap("_LATEST", "v1")
+    assert(rowsOf(store) == folded, "the old base and its deltas hold every batch")
+    store.upsert(filler(4000, 300L), 3) // committed: a no-op
+    store.upsert(kvBatch(("k2", "INSERT", 400L)), 4)
+    UpsertStateStore.awaitFolds()
+    assert(pointerOf(dir) == "v4" && !Files.exists(dir.resolve("v3")))
+    assert(rowsOf(store) == folded + (("k2", "INSERT", 400L)))
+  }
+
+  test("upsert store: a fold that crashed after the swap, before the " +
+      "prune, reads the same, and the next fold prunes what it left") {
+    val dir = Files.createTempDirectory("graft-fold-unpruned")
+    val store = new UpsertStateStore(dir.toString, Seq("k"), Seq("ts"))
+    store.upsert(filler(1000, 100L), 1)
+    store.upsert(filler(2000, 200L), 2) // a fold through 2
+    UpsertStateStore.awaitFolds()
+    val saved = Files.createTempDirectory("graft-fold-saved").resolve("t")
+    copyTree(dir, saved)
+    store.upsert(filler(4000, 300L), 3) // a fold through 3: prunes d2 and v1
+    UpsertStateStore.awaitFolds()
+    assert(pointerOf(dir) == "v3" && !Files.exists(dir.resolve("d2")) &&
+      !Files.exists(dir.resolve("v1")))
+    val folded = rowsOf(store)
+    // the crash: the swap landed, the prune did not
+    entries(saved).filterNot(entries(dir)).foreach(n => copyTree(saved.resolve(n), dir.resolve(n)))
+    assert(Seq("d2", "_committed_2", "v1").forall(n => Files.exists(dir.resolve(n))))
+    assert(rowsOf(store) == folded)
+    store.upsert(filler(8000, 400L), 4) // a fold through 4 from v3
+    UpsertStateStore.awaitFolds()
+    assert(pointerOf(dir) == "v4")
+    val names = entries(dir)
+    assert(names.filter(_.matches("v\\d+")) == Set("v3", "v4"), names)
+    assert(!names.exists(n => n.matches("(d|_committed_)[23]")), names)
+    assert(rowsOf(store) == (0 until 8000).map(i => (s"f$i", "INSERT", 400L)).toSet)
+  }
+
+  test("upsert store: a replay of a batch the base holds writes nothing, " +
+      "after its marker is pruned too") {
+    val dir = Files.createTempDirectory("graft-fold-replay")
+    val store = new UpsertStateStore(dir.toString, Seq("k"), Seq("ts"))
+    store.upsert(filler(1000, 100L), 1)
+    store.upsert(filler(2000, 200L), 2) // a fold through 2
+    UpsertStateStore.awaitFolds()
+    store.upsert(filler(4000, 300L), 3) // a fold through 3: prunes batch 2
+    UpsertStateStore.awaitFolds()
+    assert(pointerOf(dir) == "v3" && !Files.exists(dir.resolve("_committed_2")))
+    val before = rowsOf(store)
+    assert(store.committed(1) && store.committed(2) && store.committed(3))
+    // each would win if it were written
+    store.upsert(kvBatch(("f1", "UPDATE", 900L)), 2)
+    store.upsert(kvBatch(("f1", "UPDATE", 900L)), 1)
+    UpsertStateStore.awaitFolds()
+    assert(rowsOf(store) == before)
+    assert(!Files.exists(dir.resolve("d1")) && !Files.exists(dir.resolve("d2")))
+  }
+
+  test("upsert store: a frame resolved before a fold's swap stays " +
+      "readable after it") {
+    val dir = Files.createTempDirectory("graft-fold-reader")
+    val store = new UpsertStateStore(dir.toString, Seq("k"), Seq("ts"))
+    store.upsert(filler(1000, 100L), 1)
+    store.upsert(filler(2000, 200L), 2) // a fold through 2
+    UpsertStateStore.awaitFolds()
+    store.upsert(kvBatch(("k1", "INSERT", 300L)), 3)
+    UpsertStateStore.awaitFolds()
+    assert(pointerOf(dir) == "v2")
+    val frame = store.current(spark).get // v2 + d3, its files listed now
+    val expected = frame.as[(String, String, Long)].collect().toSet
+    store.upsert(filler(4000, 400L), 4) // a fold through 4, from v2
+    UpsertStateStore.awaitFolds()
+    assert(pointerOf(dir) == "v4" && !Files.exists(dir.resolve("v1")))
+    assert(frame.as[(String, String, Long)].collect().toSet == expected)
+  }
+
+  test("a fold's jobs are named for it, outside the trigger's job group " +
+      "and batch") {
+    val dir = Files.createTempDirectory("graft-fold-jobs")
+    val store = new UpsertStateStore(dir.toString, Seq("k"), Seq("ts"))
+    store.upsert(filler(1000, 100L), 1)
+    UpsertStateStore.awaitFolds()
+    val sc = spark.sparkContext
+    val jobs = jobPropertiesOf {
+      // the local properties a streaming trigger runs its batch under
+      sc.setJobGroup("trigger-group", "trigger, batch 2")
+      sc.setLocalProperty("streaming.sql.batchId", "2")
+      try store.upsert(filler(2000, 200L), 2) // starts a fold through 2
+      finally {
+        sc.clearJobGroup()
+        sc.setLocalProperty("streaming.sql.batchId", null)
+      }
+      UpsertStateStore.awaitFolds()
+    }
+    assert(pointerOf(dir) == "v2")
+    val (fold, trigger) = jobs.partition(isFold)
+    assert(fold.nonEmpty && trigger.nonEmpty, jobs)
+    val label = "state-store fold through batch 2"
+    fold.foreach { p =>
+      assert(p.getProperty("spark.job.description") == label)
+      assert(p.getProperty("callSite.short") == label)
+      assert(p.getProperty("spark.jobGroup.id") == null)
+      assert(p.getProperty("streaming.sql.batchId") == null)
+    }
+    trigger.foreach(p => assert(p.getProperty("streaming.sql.batchId") == "2"))
   }
 
   test("upsert store: a batch that changes a column type merges, and " +
